@@ -1,9 +1,12 @@
 #!/usr/bin/env python
-"""Warm-query phase breakdown for the engine search path (guide §1).
+"""Warm-query profile of the engine search path.
 
-Splits each bench query's warm latency into: driver-side expansion +
-block planning, the scored-set Spark job (noop sink), and the full
-search (top-k + hydration + collect).  Usage:
+For each query, runs ``Searcher.search(...).collect()`` n times on a
+pinned Searcher and prints the best wall time, the Spark stages the last
+run started (``metrics.stage_metrics``) and the plan the query recorded
+(``Searcher.last_plan``: blocks kept, τ passes, estimated scorer rows and
+scorer tasks).  ``local[k]`` and the driver heap are sized from this
+machine's cores and available RAM.  Usage:
 
     python scripts/profile_search.py INDEX_DIR [n_repeats]
 """
@@ -14,7 +17,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
 QUERIES = {
     "search_and": "index search",
@@ -29,71 +34,46 @@ QUERIES = {
 def main() -> int:
     from pyspark.sql import SparkSession
 
+    from run import box_sizing  # perfbench/run.py: the benchmark's sizing
+
     idx = sys.argv[1]
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 5
+    # Python workers import the package too
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
+    size = box_sizing()
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+        SparkSession.builder.master(f"local[{size['k']}]")
+        .config("spark.sql.shuffle.partitions", str(size["partitions"]))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", f"{size['driver_mb']}m")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    from sphinxsearchengine_spark import metrics as M
     from sphinxsearchengine_spark.corpus import PINNED_NOW
     from sphinxsearchengine_spark.engine import Searcher
-    from sphinxsearchengine_spark.index.layout import IndexLayout
-    from sphinxsearchengine_spark.query import executor as X
-    from sphinxsearchengine_spark.query.parser import parse_query
 
     searcher = Searcher(spark, idx, cache_docs=True)
     searcher.search("index", limit=20, now_ts=PINNED_NOW).collect()
-    layout = IndexLayout(idx)
-    out = {}
+    out = {"local": size["k"]}
     for name, q in QUERIES.items():
-        phases = {"expand": [], "plan": [], "score_noop": [], "full": []}
+        walls = []
         for _ in range(n):
-            qq = parse_query(q)
-            t0 = time.time()
-            mapping, stats, buckets = X._expand_groups(
-                spark, layout, qq, searcher._dict_pdf
-            )
-            t1 = time.time()
-            phases["expand"].append(t1 - t0)
-            phase_alts = {}
-            for gid, g in enumerate(qq.groups):
-                pc = 0
-                for a in g.alts:
-                    if a.kind == "phrase":
-                        phase_alts.setdefault(gid, {})[pc] = len(a.words)
-                        pc += 1
-            pdf, info = X._plan_blocks(
-                spark, layout, None, mapping, stats, buckets,
-                len(qq.groups), phase_alts, PINNED_NOW,
-                bmx_pdf=searcher._blockmax_pdf,
-            )
-            t2 = time.time()
-            phases["plan"].append(t2 - t1)
-            scored = X.score_matches(
-                spark, idx, qq, now_ts=PINNED_NOW,
-                prune={"topn": 20, "order": "weight", "sort": "desc"},
-                _ctx=searcher._ctx(),
-            )
-            scored.write.format("noop").mode("overwrite").save()
-            t3 = time.time()
-            phases["score_noop"].append(t3 - t2)
-            t4 = time.time()
+            sid = M.latest_stage_id(spark)
+            t0 = time.perf_counter()
             searcher.search(q, limit=20, now_ts=PINNED_NOW).collect()
-            phases["full"].append(time.time() - t4)
+            walls.append(time.perf_counter() - t0)
+        stages = M.stage_metrics(spark, sid)
         out[name] = {
-            k: round(min(v), 3) for k, v in phases.items()
+            "best_s": round(min(walls), 3),
+            "spark_stages": len(stages),
+            "plan": searcher.last_plan,
         }
-        if info:
-            out[name]["n_blocks"] = info.get("n_blocks")
-        out[name]["n_terms"] = len(mapping)
-    print(json.dumps(out, indent=1))
+    print(json.dumps(out, indent=1, default=str))
     spark.stop()
     return 0
 

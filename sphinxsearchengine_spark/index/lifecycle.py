@@ -80,12 +80,12 @@ def upsert(
 
 def delete(spark: SparkSession, index_dir: str, docids: list[int] | DataFrame) -> IndexMeta:
     """S4: delete by id — tombstones covering every current segment."""
-    from sphinxsearchengine_spark.query.executor import live_docs
+    from sphinxsearchengine_spark.query.executor import live_docs, local_frame
 
     layout = IndexLayout(index_dir)
     meta = layout.meta
     if not isinstance(docids, DataFrame):
-        docids = spark.createDataFrame([(int(d),) for d in docids], "docid long")
+        docids = local_frame(spark, [(int(d),) for d in docids], "docid long")
     docids = docids.select("docid").distinct()
     n_dead = (
         live_docs(spark, index_dir).select("docid").join(docids, "docid", "left_semi").count()

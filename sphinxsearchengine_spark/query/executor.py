@@ -30,8 +30,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from sphinxsearchengine_spark import codec
 from sphinxsearchengine_spark.config import (
@@ -40,6 +43,7 @@ from sphinxsearchengine_spark.config import (
     EXPANSION_LIMIT,
     FIELD_NAMES,
     FIELD_WEIGHTS,
+    FIELDS,
     MATCH_CAP,
 )
 from sphinxsearchengine_spark.index.layout import IndexLayout
@@ -49,6 +53,23 @@ from sphinxsearchengine_spark.text.tokenizer import stem_token
 
 _MAX_CHAR = "￿"
 _POS_BITS = 21  # 2 MB field cap → < 2^21 token positions
+# low bits of the scorer's (docid rank, field) pack: wide enough for the
+# largest field id in config.FIELDS
+_FIELD_BITS = max(FIELDS.values()).bit_length()
+_FIELD_MASK = (1 << _FIELD_BITS) - 1
+
+# Scorer input rows per Python task: the break-even point of one more
+# task.  Measured on a 4-core host (local[4], `hotterm` on 3k- and
+# 24k-doc indexes, task count forced, noop sink): each extra task costs
+# ~0.29 s of executor time and, spreading 1 task to 4, ~0.1 s of wall
+# (worker round-trip, Arrow framing, scheduling), while a scorer row
+# costs ~4.7 µs (3k → 24k rows on one task: +0.1 s).  Splitting R rows
+# over n ≤ cores tasks saves (1 - 1/n)·R·4.7 µs of wall, which pays for
+# the 0.1 s at R ≈ 0.1 / (0.75 · 4.7e-6) ≈ 28k rows; at 24k rows one
+# task and four ran the same wall, four at 3x the executor time.
+# It also gates the two-pass τ branch: a plan that fits one task cannot
+# save a task by cutting blocks.
+SCORE_ROWS_PER_TASK = 25_000
 
 SCORED_SCHEMA = (
     "docid long, weight_raw double, score double, bm25 double, prox double, "
@@ -59,6 +80,24 @@ RESULT_COLS = [
     "rank", "docid", "score", "weight_raw", "repo", "path", "commit", "lang",
     "content_sha", "category", "date_insert", "date_modify",
 ]
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """Driver-side rows (tuples in ``schema`` DDL column order) as a
+    LocalRelation.
+
+    ``spark.createDataFrame(list_of_tuples, schema)`` plans a parallelized
+    LogicalRDD, and broadcasting that runs a Spark job per use; an Arrow
+    table becomes a LocalRelation, which the planner broadcasts (or
+    inlines) on the driver with no job at all."""
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 def _live_union(spark: SparkSession, layout: IndexLayout, sub: str) -> DataFrame | None:
@@ -466,7 +505,7 @@ def _plan_blocks(spark, layout, map_df, mapping, stats, buckets,
             for pid, nmem in pids.items()
         ]
         if nmem_rows:
-            nmem_df = spark.createDataFrame(nmem_rows, "gid int, pid int, nmem int")
+            nmem_df = local_frame(spark, nmem_rows, "gid int, pid int, nmem int")
             pres = pres.join(F.broadcast(nmem_df), ["gid", "pid"], "left")
             pres = pres.filter(F.col("nmem").isNull() | (F.col("nmidx") >= F.col("nmem")))
         per_gid = pres.groupBy("blk", "gid").agg(F.sum("gn").alias("gn"))
@@ -477,7 +516,9 @@ def _plan_blocks(spark, layout, map_df, mapping, stats, buckets,
             .join(ub, "blk")
         )
         pdf = blocks.toPandas()
-    except Exception:
+    except Exception as e:
+        # planner failure degrades to the unpruned scan; say why
+        info["fallback"] = f"{type(e).__name__}: {str(e).splitlines()[0][:200]}"
         return None, info
     pdf = _finish_block_plan(pdf, now_ts)
     info.update(planned=True, n_blocks=len(pdf))
@@ -559,7 +600,7 @@ def _make_scorer(n_groups: int, phrase_alts: dict[int, dict[int, int]],
             # ascending rank), so downstream float accumulation order —
             # and with it every rounded score — is unchanged.
             codes, du = pd.factorize(docid_v, sort=True)
-            pkey = (codes.astype(np.int64) << 2) | fld_v.astype(np.int64)
+            pkey = (codes.astype(np.int64) << _FIELD_BITS) | fld_v.astype(np.int64)
             po = np.argsort(pkey)
             k_o = pkey[po]
             knew = np.ones(len(k_o), dtype=bool)
@@ -567,7 +608,7 @@ def _make_scorer(n_groups: int, phrase_alts: dict[int, dict[int, int]],
             key_of_val = np.empty(len(po), dtype=np.int64)
             key_of_val[po] = np.cumsum(knew) - 1
             ks = k_o[knew]
-            uniq = np.stack([du[ks >> 2], ks & 3], axis=1)
+            uniq = np.stack([du[ks >> _FIELD_BITS], ks & _FIELD_MASK], axis=1)
         else:
             uniq = np.empty((0, 2), dtype=np.int64)
             key_of_val = np.empty(0, dtype=np.int64)
@@ -840,7 +881,7 @@ def score_matches(
         query = parse_query(query)
     layout = IndexLayout(index_dir)
     if query.blank or not query.groups:
-        return spark.createDataFrame([], SCORED_SCHEMA)
+        return _no_matches(spark)
     max_score_val = None
     if categories:
         from sphinxsearchengine_spark.query.parser import with_categories
@@ -853,24 +894,27 @@ def score_matches(
     dict_pdf = _ctx.get("dict_pdf") if _ctx else None
     mapping, _stats, buckets = _expand_groups(spark, layout, query, dict_pdf)
     if not mapping:
-        return spark.createDataFrame([], SCORED_SCHEMA)
+        return _no_matches(spark)
     # not every group found in dict → AND can never be satisfied
     gids_present = {m[1] for m in mapping}
     if len(gids_present) < len(query.groups):
-        return spark.createDataFrame([], SCORED_SCHEMA)
+        return _no_matches(spark)
 
     terms = sorted({m[0] for m in mapping})
     # tid: dense int id per term — the scorer's per-term BM25 groupby
     # key, so the term STRING never crosses the Python boundary (Arrow
     # framing + pandas object-key hashing of ~1M rows per hot query)
     _tid = {t: i for i, t in enumerate(terms)}
-    map_df = spark.createDataFrame(
+    map_df = local_frame(
+        spark,
         [m + (_tid[m[0]],) for m in mapping],
         "term string, gid int, idf double, is_pm int, midx int, fld int, "
         "uex int, pid int, tid int",
     )
 
-    post = _live_union(spark, layout, "postings")
+    post = (_ctx or {}).get("postings_df")
+    if post is None:
+        post = _live_union(spark, layout, "postings")
     post = post.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
     if langs:
         post = post.filter(F.col("lang").isin(langs))  # Q6 pushdown
@@ -901,32 +945,32 @@ def score_matches(
     )
     shift = meta.block_shift
     shuffle_n = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
-    # ~rows of scorer input per task: the scorer is numpy-vectorized, so
-    # per-task fixed cost (Python worker round-trip, Arrow framing)
-    # dominates below this; above it, parallelism wins.
-    score_rows_per_task = 25_000
+    n_map = len(mapping)
+    # rows the unfiltered scan feeds the scorer: each mapping row joins
+    # every postings row of its term, about df of them
+    scan_rows = sum(_stats[m[0]][0] for m in mapping)
+    # what this call planned, for callers that pass a _ctx (SHOW META
+    # style introspection; est_rows is the whole plan's scorer input)
+    info = {"planned": False, "n_blocks": 0, "min_df": None, "passes": 1,
+            "tau": None, "est_rows": scan_rows, "scorer_tasks": 0}
+    if _ctx is not None:
+        _ctx["block_plan"] = info
 
-    def _nparts(est_rows) -> int:
-        """Scorer exchange width from the block plan's own cap metadata
-        (guide §2: derive partitioning from the data size, don't pin the
-        local core count).  A pruned scan of a few hundred postings rows
-        gets 1 task instead of shuffle_n Python worker spins; a broad
-        scan keeps full parallelism."""
-        if est_rows is None:
-            return shuffle_n
-        return max(1, min(shuffle_n, -(-int(est_rows) // score_rows_per_task)))
-
-    def run(blks, est_rows=None) -> DataFrame:
-        """Score the (optionally block-restricted) postings scan."""
+    def run(blks, est_rows: int) -> DataFrame:
+        """Score the (optionally block-restricted) postings scan.  The
+        scorer exchange width comes from the estimated rows (guide §2:
+        derive partitioning from the data size, don't pin the local core
+        count): a few thousand rows get one Python task, a broad scan
+        keeps full parallelism."""
+        n_tasks = max(1, min(shuffle_n, -(-int(est_rows) // SCORE_ROWS_PER_TASK)))
+        info["scorer_tasks"] += n_tasks
         p = post
         if blks is not None:
             blk_col = F.expr(f"shiftrightunsigned(docid, {shift})")
             if len(blks) <= 256:
                 p = p.filter(blk_col.isin([int(b) for b in blks]))
             else:
-                bdf = spark.createDataFrame(
-                    [(int(b),) for b in blks], "blk long"
-                )
+                bdf = local_frame(spark, [(int(b),) for b in blks], "blk long")
                 p = (
                     p.withColumn("_blk", blk_col)
                     .join(F.broadcast(bdf), F.col("_blk") == bdf.blk, "left_semi")
@@ -959,7 +1003,7 @@ def score_matches(
                 "docid", "term", "field", "tf", "exact_tf", "pos_vb",
                 "lang", "date_insert", "date_modify",
             )
-            .repartition(_nparts(est_rows), "docid")
+            .repartition(n_tasks, "docid")
             .join(F.broadcast(map_df), "term")
         )
         c = c.filter((F.col("fld") == -1) | (F.col("field") == F.col("fld")))
@@ -984,41 +1028,42 @@ def score_matches(
             len(query.groups), phrase_alts, now_ts,
             bmx_pdf=(_ctx or {}).get("blockmax_pdf"),
         )
-        if _ctx is not None:
-            _ctx["block_plan"] = binfo
+        info.update(binfo)
     if blk_plan is None:
-        return run(None)
+        return run(None, scan_rows)
     if len(blk_plan) == 0:
         # no block holds all groups: AND is unsatisfiable, zero scan
-        return spark.createDataFrame([], SCORED_SCHEMA)
+        info["est_rows"] = 0
+        return _no_matches(spark)
     from sphinxsearchengine_spark.config import POSTINGS_BLOCK
 
     occupied = min(1 << (64 - shift), meta.n_docs // POSTINGS_BLOCK + 1)
+    plan_rows = int(blk_plan["cap"].sum()) * n_map
+    unfiltered = len(blk_plan) >= 0.7 * occupied
+    info["est_rows"] = scan_rows if unfiltered else plan_rows
     if (
         prune is not None
         and prune.get("order") == "weight"
         and prune.get("sort") == "desc"
         and len(blk_plan) > 8
+        # a plan that fits one scorer task cannot save a task by cutting
+        # blocks: pass A would only add a checkpoint and a collect job
+        and info["est_rows"] > SCORE_ROWS_PER_TASK
     ):
         # two-pass τ refinement: score the highest-ub blocks first, take
         # the K-th weight as τ, then visit only remaining blocks whose ub
         # can still beat it.  τ_final ≥ τ_passA, so skipping ub < τ_passA
         # blocks is exact.
-        import numpy as np
-
         k_ = prune["topn"]
         plan = blk_plan.sort_values("ub", ascending=False, kind="mergesort")
         csum = plan["cap"].to_numpy().cumsum()
         take = int(np.searchsorted(csum, max(4 * k_, 256))) + 1
-        n_map = max(len(mapping), 1)
         if take >= len(plan):
-            return run(plan["blk"].to_numpy(),
-                       est_rows=int(plan["cap"].sum()) * n_map)
+            return run(plan["blk"].to_numpy(), plan_rows)
         pass_a = plan.iloc[:take]
         rest = plan.iloc[take:]
         scored_a = run(
-            pass_a["blk"].to_numpy(),
-            est_rows=int(pass_a["cap"].sum()) * n_map,
+            pass_a["blk"].to_numpy(), int(pass_a["cap"].sum()) * n_map
         ).localCheckpoint()
         top_a = (
             scored_a.select("weight_raw")
@@ -1027,35 +1072,36 @@ def score_matches(
             .collect()
         )
         if len(top_a) >= k_:
-            tau = top_a[-1].weight_raw
-            rest = rest[rest["ub"] >= tau]
+            info["tau"] = top_a[-1].weight_raw
+            rest = rest[rest["ub"] >= info["tau"]]
+        # pass B may be empty when τ cuts every remaining block
+        info.update(passes=2, pass_a_blocks=len(pass_a), pass_b_blocks=len(rest))
         if len(rest) == 0:
             return scored_a
         if len(pass_a) + len(rest) >= 0.7 * occupied:
             # τ couldn't cut much: finish with an unfiltered scan for
             # the rest (avoids a huge broadcast block list)
+            ablk = local_frame(
+                spark, [(int(b),) for b in pass_a["blk"]], "ablk long"
+            )
             return scored_a.unionByName(
-                run(None).join(
-                    F.broadcast(
-                        spark.createDataFrame(
-                            [(int(b),) for b in pass_a["blk"]], "ablk long"
-                        )
-                    ),
+                run(None, scan_rows).join(
+                    F.broadcast(ablk),
                     F.expr(f"shiftrightunsigned(docid, {shift})") == F.col("ablk"),
                     "left_anti",
                 )
             )
         return scored_a.unionByName(
-            run(rest["blk"].to_numpy(),
-                est_rows=int(rest["cap"].sum()) * n_map)
+            run(rest["blk"].to_numpy(), int(rest["cap"].sum()) * n_map)
         )
     # presence-only filtering: skip when nearly every block survives
-    if len(blk_plan) >= 0.7 * occupied:
-        return run(None)
-    return run(
-        blk_plan["blk"].to_numpy(),
-        est_rows=int(blk_plan["cap"].sum()) * max(len(mapping), 1),
-    )
+    if unfiltered:
+        return run(None, scan_rows)
+    return run(blk_plan["blk"].to_numpy(), plan_rows)
+
+
+def _no_matches(spark: SparkSession) -> DataFrame:
+    return local_frame(spark, [], SCORED_SCHEMA)
 
 
 _ORDER_COLS = {"weight": "weight_raw", "date_insert": "date_insert",

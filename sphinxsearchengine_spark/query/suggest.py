@@ -123,11 +123,11 @@ def suggest_terms(
                 if d <= max_dist:
                     offer(w, (d, -int(cv), form))
     else:
-        from sphinxsearchengine_spark.query.executor import _live_union
+        from sphinxsearchengine_spark.query.executor import _live_union, local_frame
 
         layout = IndexLayout(index_dir)
         dic = _live_union(spark, layout, "dict")
-        wdf = spark.createDataFrame([(w,) for w in words], "word string")
+        wdf = local_frame(spark, [(w,) for w in words], "word string")
         form = F.when(
             F.col("term").startswith(EXACT_PREFIX),
             F.expr(f"substring(term, {len(EXACT_PREFIX) + 1})"),

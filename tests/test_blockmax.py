@@ -114,10 +114,38 @@ def test_searcher_pinned_pandas_planner(spark, bm_env):
     assert [r.docid for r in got] == [w["docid"] for w in want]
 
 
-def test_two_pass_tau_path(spark, bm_env):
-    """Force the two-pass branch (> 8 surviving blocks) and check rank
-    identity still holds — τ skipping must be invisible."""
+def test_two_pass_tau_path(spark, bm_env, monkeypatch):
+    """The two-pass τ branch runs only for plans larger than one scorer
+    task; force it by shrinking the task size and check rank identity
+    still holds — τ skipping must be invisible."""
+    from sphinxsearchengine_spark.query import executor as X
+
     idx, oracle = bm_env
-    got = search(spark, idx, "hotterm", limit=3, now_ts=PINNED_NOW).collect()
     want = oracle.search("hotterm", limit=3, now_ts=PINNED_NOW)
+
+    # default: the 3000-doc hotterm plan fits one task → one pass
+    ctx: dict = {"dict_pdf": None, "docs_df": None}
+    got = search(spark, idx, "hotterm", limit=3, now_ts=PINNED_NOW, _ctx=ctx).collect()
+    info = ctx["block_plan"]
+    assert info["planned"] and info["n_blocks"] > 8
+    assert info["est_rows"] <= X.SCORE_ROWS_PER_TASK
+    assert (info["passes"], info["scorer_tasks"], info["tau"]) == (1, 1, None)
     assert [r.docid for r in got] == [w["docid"] for w in want]
+
+    # limit 3: τ from pass A cuts every other block; limit 10: pass B
+    # finishes with the unfiltered scan minus pass A's blocks
+    monkeypatch.setattr(X, "SCORE_ROWS_PER_TASK", 64)
+    pass_b = []
+    for limit in (3, 10):
+        want = oracle.search("hotterm", limit=limit, now_ts=PINNED_NOW)
+        ctx = {"dict_pdf": None, "docs_df": None}
+        got = search(spark, idx, "hotterm", limit=limit, now_ts=PINNED_NOW,
+                     _ctx=ctx).collect()
+        info = ctx["block_plan"]
+        assert info["passes"] == 2 and info["tau"] is not None
+        assert info["scorer_tasks"] > 1
+        pass_b.append(info["pass_b_blocks"])
+        assert [r.docid for r in got] == [w["docid"] for w in want]
+        for r, w in zip(got, want):
+            assert math.isclose(r.score, w["score"], rel_tol=1e-9), r.docid
+    assert pass_b[0] == 0 < pass_b[1]

@@ -103,3 +103,37 @@ def test_hash_sample_is_narrow_and_jvm_only(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     # '*(n)' prefixes mark whole-stage-codegen spans in the simple plan
     assert "*(1)" in plan, plan
+
+
+def test_warm_searcher_plan_has_no_logical_rdd(spark, idx):
+    """Driver-side frames (term mapping, block lists, empty results) are
+    LocalRelations: broadcasting a parallelized LogicalRDD would run a
+    Spark job on every warm query."""
+    from sphinxsearchengine_spark.engine import Searcher
+
+    s = Searcher(spark, idx, cache_docs=True)
+    for q in ["hotterm", "needleuniq hotterm", '"alpha beta"', "pars*",
+              "@title file_1*", "zzznotaword", "hotterm -"]:
+        scored = s.score_matches(
+            q, now_ts=PINNED_NOW,
+            prune={"topn": 20, "order": "weight", "sort": "desc"},
+        )
+        plan = scored._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan, (q, plan)
+
+
+def test_local_frame_round_trips_types(spark):
+    from pyspark.sql.types import StructType
+
+    from sphinxsearchengine_spark.query.executor import SCORED_SCHEMA, local_frame
+
+    schema = "term string, gid int, idf double, blk long, flag boolean"
+    rows = [("a", 1, 0.5, 1 << 40, True), ("ß", -2, float("inf"), -1, False)]
+    df = local_frame(spark, rows, schema)
+    assert df.schema == StructType.fromDDL(schema)
+    assert [tuple(r) for r in df.collect()] == rows
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation")
+    empty = local_frame(spark, [], SCORED_SCHEMA)
+    assert empty.collect() == []
+    assert empty.schema == spark.createDataFrame([], SCORED_SCHEMA).schema

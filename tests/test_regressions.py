@@ -72,3 +72,35 @@ def test_searcher_refresh_preserves_dict_cache_rows(spark, tmp_path):
     s.refresh()
     assert s._dict_pdf is None
     assert s.dict_cache_rows == 0
+
+
+def test_scorer_field_pack_width_from_config():
+    """ADVICE r6: the scorer's (docid rank, field) pack takes its field
+    width from config.FIELDS, so every field id round-trips and a doc
+    matched only in the highest-id field is scored with that field's
+    weight."""
+    import numpy as np
+
+    from sphinxsearchengine_spark.config import FIELDS
+    from sphinxsearchengine_spark.query import executor as X
+
+    top = max(FIELDS.values())
+    assert X._FIELD_BITS == top.bit_length()
+    assert X._FIELD_MASK == (1 << X._FIELD_BITS) - 1
+    rank = np.arange(0, 1 << 20, 4099, dtype=np.int64)
+    for f in FIELDS.values():
+        packed = (rank << X._FIELD_BITS) | f
+        assert (packed >> X._FIELD_BITS == rank).all()
+        assert (packed & X._FIELD_MASK == f).all()
+
+    # two adjacent keywords in the highest-id field → LCS 2 there
+    weights = [1, 20, 2]
+    scorer = X._make_scorer(2, {}, now_ts=0, weights_by_fid=weights)
+    rows = [
+        _kw_row(docid=d, tid=g, gid=g, field=top, positions=(g + 1,))
+        for d in (5, 9) for g in (0, 1)
+    ]
+    out = pd.concat(list(scorer(iter([pd.DataFrame(rows)]))))
+    want = 2 * weights[top] / ranker.max_lcs(2) * 2000
+    assert sorted(out["docid"]) == [5, 9]
+    assert np.allclose(out["prox"], want, rtol=0, atol=1e-12)
