@@ -16,12 +16,18 @@ SphinxSearchEngine_class.php:397-453) streams a SQL join through batched
     dictionary = blockmax rollup (blocks partition each term's docids)
     docs table = straight parallel write; n_docs observed on the write
 
-Salting: the docid-salt spreads every term — hot or not — across
-``salt_factor`` reducers per bucket, so a term occurring in 50% of all
-docs (see FIXTURES.md planted ``hotterm``) cannot pin a single reducer;
-readers treat each bucket as `salt_factor` sorted runs.  This is the
-explicit skew defusal mandated by the north rule; AQE remains enabled as
-backstop.
+Salting: the docid-salt splits every term — hot or not — into
+``salt_factor`` (bucket, salt) keys per bucket, so a term occurring in
+50% of all docs (see FIXTURES.md planted ``hotterm``) cannot pin a
+single reducer.  ``salt_factor`` is a cap, not the width: the reducer
+count comes from the segment's size (`build_widths`, one task per
+`BUILD_DOCS_PER_TASK` docs, at most nb × salt_factor), so a small delta
+runs on one task while a large build keeps nb × salt_factor.  A task may
+hold several (bucket, salt) keys and writes one sorted file per bucket
+it holds, so readers see each bucket as up to `salt_factor` sorted runs.
+This is the explicit skew defusal mandated by the north rule; AQE
+remains enabled as backstop.  The tokenize split count is sized the same
+way (at most 2 × parallelism).
 
 Resume: each build writes a per-stage lineage manifest
 (manifests/<seg>.json) recording stage → output path + row count +
@@ -38,6 +44,7 @@ import time
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from sphinxsearchengine_spark import codec
 from sphinxsearchengine_spark.config import EngineConfig, FIELD_NAMES, FIELDS
@@ -46,6 +53,8 @@ from sphinxsearchengine_spark.index.layout import (
     IndexLayout,
     IndexMeta,
     POSTINGS_SCHEMA,
+    TABLE_SCHEMAS,
+    TOMBSTONE_SCHEMA,
 )
 
 # Document columns fed to the tokenizer, in field order (SURVEY.md §1.5):
@@ -360,38 +369,81 @@ def _tokenize_batch(pdf_iter):
         )
 
 
+# Documents per builder Python task, for both the tokenize map and the
+# (bucket, salt) reducer: the break-even point of one more task.
+# Measured on a 4-core host (local[4], perfbench's 1968-doc corpus,
+# widths forced): a Python task costs ~0.29 s of executor time before
+# it touches a row (worker round-trip, Arrow framing, scheduling, the
+# reducer's per-bucket files; the reducer went 0.98 s → 3.04 s of
+# executor time from 1 task to 8, and a 52-doc upsert spent 9.2 s on 32
+# reducer tasks), of which ~0.1 s lands on the wall once the cores are
+# busy (1 → 8 reducer tasks: 1.01 → 0.86 s of wall, ~0.07 s per extra
+# task; the scorer measured 0.1 s, see SCORE_ROWS_PER_TASK).  A document
+# costs ~0.30 ms of tokenize + pack and ~0.35 ms of reduce (one task
+# each: 0.83 s and 0.98 s of executor time, less the fixed cost).
+# Splitting D docs over n ≤ cores tasks saves (1 - 1/n)·D·0.33 ms of
+# wall, which pays for the 0.1 s at D ≈ 0.1 / (0.75 · 0.33e-3) ≈ 400
+# docs; rounded down to 384 so a 50k-doc build (bench.py at sf0.1)
+# still reaches the 128-reducer cap on 32 cores.
+BUILD_DOCS_PER_TASK = 384
+
+
+def build_widths(n_docs: int, parallelism: int, nb: int,
+                 salt_factor: int) -> tuple[int, int]:
+    """(tokenize splits, reducer tasks) for a segment of ``n_docs``."""
+    tasks = max(1, -(-n_docs // BUILD_DOCS_PER_TASK))
+    return min(tasks, 2 * parallelism), min(tasks, nb * salt_factor)
+
+
 class _split_hint:
-    """Temporarily size parquet input splits so a stage reaches the
-    cluster's full parallelism.  Spark bins small files into splits of
-    maxPartitionBytes (+4 MB open cost each): a small test corpus would
-    otherwise tokenize on ~4 tasks no matter how many cores exist.  At
-    production scale (>=128 MB files) the defaults already split fine
-    and this becomes a no-op.
+    """Temporarily size parquet input splits so a stage's scan has
+    ``n_splits`` partitions.  By default Spark bins small files into
+    splits of maxPartitionBytes (+4 MB open cost each) and also cuts the
+    split size to total / ``spark.sql.files.minPartitionNum`` (the
+    default parallelism when unset), so a 52-doc delta would tokenize on
+    5 tasks whatever it asked for.  Here the split size is
+    ceil(total / n_splits) with no open cost, and minPartitionNum is 1 so
+    nothing re-cuts it: one file gives exactly n_splits splits (once it
+    has at least n_splits² bytes), and n_splits = 1 gives one split over
+    any number of files.  Several files are packed greedily, which can
+    add a split.  A split reads only the row groups whose midpoint falls
+    inside it, so a one-row-group file is still read by one task however
+    it is cut.  At production scale (>=128 MB per split) the defaults
+    already split fine and this becomes a no-op.
 
     CONCURRENCY: this (and _whole_files) mutates session-level
     spark.sql.files.* conf for the duration of the stage — run ONE build
     per SparkSession at a time; for concurrent builds use
     ``spark.newSession()`` per build so each gets its own conf."""
 
-    def __init__(self, spark, path: str, parallelism: int):
+    _KEYS = (
+        "spark.sql.files.maxPartitionBytes",
+        "spark.sql.files.openCostInBytes",
+        "spark.sql.files.minPartitionNum",
+    )
+
+    def __init__(self, spark, path: str, n_splits: int):
         from sphinxsearchengine_spark import fs
 
         self.spark = spark
-        total = fs.total_size(path)
-        self.target = max(total // max(parallelism, 1) + 1, 1 << 20)
+        self.n = max(n_splits, 1)
+        self.target = max(-(-fs.total_size(path) // self.n), 1)
 
     def __enter__(self):
         conf = self.spark.conf
-        self.old_mpb = conf.get("spark.sql.files.maxPartitionBytes")
-        self.old_open = conf.get("spark.sql.files.openCostInBytes")
+        self.old = {k: conf.get(k, None) for k in self._KEYS}
         if self.target < 128 * 1024 * 1024:
-            conf.set("spark.sql.files.maxPartitionBytes", str(self.target))
-            conf.set("spark.sql.files.openCostInBytes", "0")
+            conf.set(self._KEYS[0], str(self.target))
+            conf.set(self._KEYS[1], "0")
+            conf.set(self._KEYS[2], "1")
         return self
 
     def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.files.maxPartitionBytes", self.old_mpb)
-        self.spark.conf.set("spark.sql.files.openCostInBytes", self.old_open)
+        for k, v in self.old.items():
+            if v is None:
+                self.spark.conf.unset(k)
+            else:
+                self.spark.conf.set(k, v)
 
 
 def block_shift_for(n_docs: int) -> int:
@@ -715,9 +767,10 @@ def build_segment(
         stages[stage] = {"ok": True, "ts": time.time(), **info}
         _manifest_save(man_path, manifest)
 
+    # the docs write is cast to the declared schema readers use
     doc_cols = [
-        "docid", "repo", "path", "commit", "lang", "content", "content_sha",
-        "category", "category_search", "date_insert", "date_modify",
+        F.col(f.name).cast(f.dataType).alias(f.name)
+        for f in StructType.fromDDL(TABLE_SCHEMAS["docs"])
     ]
 
     if not done("docs"):
@@ -740,6 +793,12 @@ def build_segment(
         mark("docs", path=layout.docs(seg), n_docs=n_docs)
 
     parallelism = spark.sparkContext.defaultParallelism
+    tok_tasks, reduce_tasks = build_widths(
+        stages["docs"]["n_docs"], parallelism, nb, salt_factor
+    )
+    # the blockmax and dict writes: one file per bucket either way, so a
+    # delta needs no more tasks than its reducers
+    bucket_tasks = min(nb, reduce_tasks)
 
     if block_shift is None:
         block_shift = stages.get("blockmax", {}).get("block_shift")
@@ -765,7 +824,7 @@ def build_segment(
             F.max("dsum").alias("max_dsum"),
         )
         (
-            bmx.repartition(nb, "bucket")
+            bmx.repartition(bucket_tasks, "bucket")
             .sortWithinPartitions("bucket", "term", "blk")
             .write.mode("overwrite")
             .partitionBy("bucket")
@@ -785,8 +844,8 @@ def build_segment(
         _pre_stage = _metrics.latest_stage_id(spark)
 
         fs.delete(layout.postings(seg))  # clean slate for side-output files
-        with _split_hint(spark, layout.docs(seg), parallelism * 2):
-            tok_src = spark.read.parquet(layout.docs(seg)).select(
+        with _split_hint(spark, layout.docs(seg), tok_tasks):
+            tok_src = layout.read(spark, "docs", seg).select(
                 "docid", "path", "lang", "content", "category_search",
                 "date_insert", "date_modify",
             )
@@ -809,7 +868,7 @@ def build_segment(
                     schema=_packed.PACKED_SCHEMA,
                 )
                 per_doc = (
-                    tok.repartition(nb * salt_factor, "bucket", "salt")
+                    tok.repartition(reduce_tasks, "bucket", "salt")
                     .mapInArrow(
                         _packed.packed_writer_and_rollup(
                             layout.postings(seg), block_shift
@@ -834,7 +893,7 @@ def build_segment(
                 # to/from-pandas conversions cost ~35% of the whole
                 # postings stage
                 per_doc = (
-                    tok.repartition(nb * salt_factor, "bucket", "salt")
+                    tok.repartition(reduce_tasks, "bucket", "salt")
                     .drop("salt")
                     .sortWithinPartitions("bucket", "term", "field", "docid")
                     .mapInArrow(
@@ -857,7 +916,8 @@ def build_segment(
             shuf["shuffle_write_bytes"] / max(n_docs_seg, 1), 2
         )
         mark("postings", path=layout.postings(seg), salt_factor=salt_factor,
-             packed=packed, **shuf)
+             packed=packed, tokenize_tasks=tok_tasks,
+             reduce_tasks=reduce_tasks, **shuf)
         mark("blockmax", path=layout.blockmax(seg), block_shift=block_shift)
 
     if not done("blockmax"):
@@ -866,7 +926,7 @@ def build_segment(
         # whole-file, partition-local (the write co-located every
         # (term, docid) in one file).
         with _whole_files(spark):
-            post = spark.read.parquet(layout.postings(seg)).select(
+            post = layout.read(spark, "postings", seg).select(
                 "bucket", "term", "docid", "tf", "exact_tf", "field",
                 "date_insert", "date_modify",
             )
@@ -879,8 +939,8 @@ def build_segment(
     if not done("dict"):
         # Dictionary stats roll up exactly from block-max rows (blocks
         # partition each term's docids), saving a second postings pass.
-        with _split_hint(spark, layout.blockmax(seg), parallelism):
-            bmx = spark.read.parquet(layout.blockmax(seg))
+        with _split_hint(spark, layout.blockmax(seg), min(tok_tasks, parallelism)):
+            bmx = layout.read(spark, "blockmax", seg)
             dic = bmx.groupBy("bucket", "term").agg(
                 F.sum("n").alias("df"),
                 F.sum("hits").alias("hits"),
@@ -889,7 +949,7 @@ def build_segment(
                 F.sum("sum_etf").alias("exact_hits"),
             )
             (
-                dic.repartition(nb, "bucket")
+                dic.repartition(bucket_tasks, "bucket")
                 .sortWithinPartitions("bucket", "term")
                 .write.mode("overwrite")
                 .partitionBy("bucket")
@@ -930,8 +990,10 @@ def build_index(
         block_shift=stages["blockmax"]["block_shift"],
     )
     meta.save(index_dir)
-    # empty tombstones
-    spark.createDataFrame([], "docid long, asof_seq int").write.mode(
-        "overwrite"
-    ).parquet(layout.tombstones())
+    # empty tombstones (a LocalRelation writes them on one task)
+    from sphinxsearchengine_spark.query.executor import local_frame
+
+    local_frame(spark, [], TOMBSTONE_SCHEMA).write.mode("overwrite").parquet(
+        layout.tombstones()
+    )
     return meta

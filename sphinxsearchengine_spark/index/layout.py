@@ -23,6 +23,14 @@ date_modify — the reference's rt_attr columns, sphinx.conf:10-14) so the
 entire match+rank path is join-free until top-k hydration.  That trades
 ~10% index size for removing a docid-keyed shuffle per query — the right
 trade at 10^12 docs where the attribute table cannot be broadcast.
+
+Declared schemas: every sub-table's schema is fixed here (`TABLE_SCHEMAS`,
+the hive ``bucket`` column last, where partition discovery puts it) and
+every index read goes through `IndexLayout.read`.  A read with a declared
+schema lists files but opens no parquet footer, so it runs no Spark job;
+schema inference runs one per read.  The writers produce exactly these
+schemas (the builder casts the docs write; tests/test_lifecycle.py checks
+inferred == declared after build, upsert and compact).
 """
 
 from __future__ import annotations
@@ -41,6 +49,28 @@ POSTINGS_SCHEMA = (
     "pos_vb binary, lang string, date_insert long, date_modify long"
 )
 DICT_COLS = ["bucket", "term", "df", "hits", "max_tf", "exact_df", "exact_hits"]
+TOMBSTONE_SCHEMA = "docid long, asof_seq int"
+
+# sub-table -> declared read schema (bucket-partitioned tables end with
+# the hive partition column)
+TABLE_SCHEMAS = {
+    "postings": POSTINGS_SCHEMA + ", bucket int",
+    "dict": (
+        "term string, df long, hits long, max_tf long, exact_df long, "
+        "exact_hits long, bucket int"
+    ),
+    "blockmax": (
+        "term string, blk long, n long, hits long, max_tf long, "
+        "n_exact long, sum_etf long, max_etf long, fmask long, "
+        "max_dsum long, bucket int"
+    ),
+    "docs": (
+        "docid long, repo string, path string, commit string, lang string, "
+        "content string, content_sha string, category array<string>, "
+        "category_search string, date_insert long, date_modify long"
+    ),
+    "tombstones": TOMBSTONE_SCHEMA,
+}
 
 
 @dataclass
@@ -90,6 +120,14 @@ class IndexLayout:
 
     def tombstones(self) -> str:
         return os.path.join(self.index_dir, "tombstones")
+
+    def read(self, spark, table: str, seg: str | None = None):
+        """One segment's sub-table (a `TABLE_SCHEMAS` key; the index's
+        tombstones take no segment) read with its declared schema: no
+        schema-inference job.  A missing path still raises
+        AnalysisException here, at the read."""
+        path = self.tombstones() if table == "tombstones" else getattr(self, table)(seg)
+        return spark.read.schema(TABLE_SCHEMAS[table]).parquet(path)
 
     def manifest(self, seg: str) -> str:
         return os.path.join(self.index_dir, "manifests", f"{seg}.json")

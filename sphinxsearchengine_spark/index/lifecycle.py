@@ -30,14 +30,19 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sphinxsearchengine_spark.config import EngineConfig
 from sphinxsearchengine_spark.index.builder import build_segment
-from sphinxsearchengine_spark.index.layout import IndexLayout, IndexMeta
+from sphinxsearchengine_spark.index.layout import (
+    TOMBSTONE_SCHEMA,
+    IndexLayout,
+    IndexMeta,
+)
 
 
 def _add_tombstones(spark: SparkSession, layout: IndexLayout, docids_df: DataFrame,
                     asof_seq: int) -> None:
     (
         docids_df.select(
-            F.col("docid"), F.lit(asof_seq).cast("int").alias("asof_seq")
+            F.col("docid").cast("long").alias("docid"),
+            F.lit(asof_seq).cast("int").alias("asof_seq"),
         )
         .write.mode("append")
         .parquet(layout.tombstones())
@@ -83,18 +88,25 @@ def delete(spark: SparkSession, index_dir: str, docids: list[int] | DataFrame) -
     from sphinxsearchengine_spark.query.executor import live_docs, local_frame
 
     layout = IndexLayout(index_dir)
-    meta = layout.meta
     if not isinstance(docids, DataFrame):
         docids = local_frame(spark, [(int(d),) for d in docids], "docid long")
     docids = docids.select("docid").distinct()
     n_dead = (
         live_docs(spark, index_dir).select("docid").join(docids, "docid", "left_semi").count()
     )
+    return _commit_delete(spark, layout, docids, n_dead, docids.count())
+
+
+def _commit_delete(spark: SparkSession, layout: IndexLayout, docids: DataFrame,
+                   n_dead: int, n_ids: int) -> IndexMeta:
+    """Tombstone ``docids`` (``n_ids`` distinct, ``n_dead`` of them live)
+    in every current segment and commit the counts to meta."""
+    meta = layout.meta
     _add_tombstones(spark, layout, docids, meta.next_seq)
     meta.next_seq += 1
     meta.n_docs -= n_dead
-    meta.n_tombstones += docids.count()
-    meta.save(index_dir)
+    meta.n_tombstones += n_ids
+    meta.save(layout.index_dir)
     return meta
 
 
@@ -103,19 +115,24 @@ def purge_orphans(
 ) -> tuple[IndexMeta, int]:
     """S5: drop index docs whose docid no longer exists in the source of
     truth.  One left-anti join replaces the reference's 100k-page keyset
-    loop (SphinxSearchEngine_class.php:456-482)."""
+    loop (SphinxSearchEngine_class.php:456-482).  The anti-join runs once:
+    its docids are materialized (executor-side, eager local checkpoint)
+    and counted, and the tombstone write reads them back.  `delete`'s two
+    recounts are not needed: live_docs holds each docid once, so every
+    orphan is a distinct live doc and the count is both."""
     from sphinxsearchengine_spark.query.executor import live_docs
 
     orphans = (
         live_docs(spark, index_dir)
         .select("docid")
         .join(source_docids.select("docid").distinct(), "docid", "left_anti")
+        .localCheckpoint(eager=True)
     )
     n = orphans.count()
+    layout = IndexLayout(index_dir)
     if n == 0:
-        return IndexLayout(index_dir).meta, 0
-    meta = delete(spark, index_dir, orphans)
-    return meta, n
+        return layout.meta, 0
+    return _commit_delete(spark, layout, orphans, n, n), n
 
 
 def compact(
@@ -142,7 +159,7 @@ def compact(
     layout = IndexLayout(index_dir)
     old_meta = layout.meta
     cfg = cfg or EngineConfig(term_buckets=old_meta.term_buckets)
-    from sphinxsearchengine_spark.query.executor import live_docs
+    from sphinxsearchengine_spark.query.executor import live_docs, local_frame
 
     live = live_docs(spark, index_dir)
     seq = old_meta.next_seq
@@ -162,9 +179,9 @@ def compact(
     )
     meta.save(index_dir)  # commit point
     # post-commit cleanup: stale tombstones + superseded segments
-    spark.createDataFrame([], "docid long, asof_seq int").write.mode(
-        "overwrite"
-    ).parquet(layout.tombstones())
+    local_frame(spark, [], TOMBSTONE_SCHEMA).write.mode("overwrite").parquet(
+        layout.tombstones()
+    )
     for s in old_meta.segments:
         fs.delete(layout.segment_dir(s["name"]))
         fs.delete(layout.manifest(s["name"]))

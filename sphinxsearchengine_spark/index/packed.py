@@ -124,7 +124,6 @@ def pack_batch(out: dict, nb: int, salt_factor: int):
     """
     import pyarrow as pa
 
-    n_post = len(out["term"])
     tcodes, uniq = pd.factorize(out["term"], sort=False)
     tcodes = tcodes.astype(np.int64)
     uh = term_hashes(uniq)
@@ -134,18 +133,10 @@ def pack_batch(out: dict, nb: int, salt_factor: int):
     field = out["field"].astype(np.uint8)
     tf = out["tf"].astype("<u4")
     etf = out["exact_tf"].astype("<u4")
-    if "pos_blob" in out:
-        # contiguous per-batch blob + per-posting lengths straight from
-        # the tokenizer (r6) — no 2M-bytes-object join
-        posbuf = np.frombuffer(out["pos_blob"], dtype=np.uint8)
-        pl = out["pos_len"].astype(np.int64)
-    else:
-        pos_list = out["pos_vb"]
-        if "pos_len" in out:
-            pl = out["pos_len"].astype(np.int64)
-        else:
-            pl = np.fromiter((len(b) for b in pos_list), np.int64, n_post)
-        posbuf = np.frombuffer(b"".join(pos_list), dtype=np.uint8)
+    # contiguous per-batch blob + per-posting lengths straight from the
+    # tokenizer (r6) — no 2M-bytes-object join
+    posbuf = np.frombuffer(out["pos_blob"], dtype=np.uint8)
+    pl = out["pos_len"].astype(np.int64)
     pstart = np.cumsum(pl) - pl
 
     # (tcodes, salt, field, docid) tuples are unique — one posting per

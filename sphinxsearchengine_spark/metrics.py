@@ -55,8 +55,9 @@ def latest_stage_id(spark: SparkSession) -> int:
 def stage_metrics(spark: SparkSession, after_stage_id: int = -1) -> list[dict]:
     """Per-stage metrics for every stage with id > after_stage_id.
 
-    Returns [{stage_id, name, shuffle_write_bytes, shuffle_write_records,
-    shuffle_read_bytes, input_bytes, output_bytes}, ...] sorted by id.
+    Returns [{stage_id, name, num_tasks, shuffle_write_bytes,
+    shuffle_write_records, shuffle_read_bytes, input_bytes,
+    output_bytes}, ...] sorted by id.
     """
     _drain_listener_bus(spark)
     stages = _stage_list(spark)
@@ -69,6 +70,7 @@ def stage_metrics(spark: SparkSession, after_stage_id: int = -1) -> list[dict]:
             {
                 "stage_id": s.stageId(),
                 "name": s.name(),
+                "num_tasks": s.numTasks(),
                 "shuffle_write_bytes": s.shuffleWriteBytes(),
                 "shuffle_write_records": s.shuffleWriteRecords(),
                 "shuffle_read_bytes": s.shuffleReadBytes(),

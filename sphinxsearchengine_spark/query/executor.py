@@ -106,8 +106,8 @@ def _live_union(spark: SparkSession, layout: IndexLayout, sub: str) -> DataFrame
     meta = layout.meta
     dfs = []
     for seg in meta.segments:
-        path = getattr(layout, sub)(seg["name"])
-        dfs.append(spark.read.parquet(path).withColumn("seq", F.lit(seg["seq"])))
+        df = layout.read(spark, sub, seg["name"])
+        dfs.append(df.withColumn("seq", F.lit(seg["seq"])))
     if not dfs:
         return None
     out = dfs[0]
@@ -117,7 +117,7 @@ def _live_union(spark: SparkSession, layout: IndexLayout, sub: str) -> DataFrame
 
 
 def _apply_tombstones(spark, layout: IndexLayout, df: DataFrame) -> DataFrame:
-    ts = spark.read.parquet(layout.tombstones())
+    ts = layout.read(spark, "tombstones")
     cond = (df.docid == ts.docid) & (df.seq < ts.asof_seq)
     return df.join(F.broadcast(ts), cond, "left_anti")
 
@@ -131,7 +131,7 @@ def live_docs(spark: SparkSession, index_dir: str) -> DataFrame:
     layout = IndexLayout(index_dir)
     meta = layout.meta
     if len(meta.segments) == 1 and meta.n_tombstones == 0:
-        return spark.read.parquet(layout.docs(meta.segments[0]["name"]))
+        return layout.read(spark, "docs", meta.segments[0]["name"])
 
     from pyspark.sql import Window
 

@@ -148,3 +148,65 @@ def test_build_resume(spark, tmp_path):
     after = search(spark, idx, "hotterm", limit=5, now_ts=PINNED_NOW).collect()
     assert [r.docid for r in before] == [r.docid for r in after]
     assert [r.score for r in before] == [r.score for r in after]
+
+
+def _assert_declared_schemas(spark, layout):
+    from pyspark.sql.types import StructType
+
+    from sphinxsearchengine_spark.index.layout import TABLE_SCHEMAS
+
+    for seg in layout.meta.segments:
+        for table in ("postings", "dict", "blockmax", "docs"):
+            path = getattr(layout, table)(seg["name"])
+            inferred = spark.read.parquet(path).schema
+            assert inferred == StructType.fromDDL(TABLE_SCHEMAS[table]), (
+                seg["name"], table)
+    inferred = spark.read.parquet(layout.tombstones()).schema
+    assert inferred == StructType.fromDDL(TABLE_SCHEMAS["tombstones"])
+
+
+def test_small_delta_widths_and_declared_schemas(spark, tmp_path):
+    """A small upsert runs its builder Python stages on one task each
+    and says so in its manifest; every sub-table the builder and the
+    lifecycle write keeps the schema readers declare (the tripwire for
+    declared reads); a declared read runs no Spark job, and a missing
+    table still fails at the read."""
+    import json
+
+    from pyspark.errors import AnalysisException
+
+    from sphinxsearchengine_spark import metrics
+
+    idx = str(tmp_path / "idx")
+    docs = derive_documents(generate_corpus(spark, 60, partitions=2))
+    build_index(spark, docs, idx, CFG, salt_factor=2)
+    layout = IndexLayout(idx)
+    _assert_declared_schemas(spark, layout)
+
+    batch = docs.orderBy("docid").limit(4).withColumn(
+        "content", F.lit("widthtoken small delta"))
+    before = metrics.latest_stage_id(spark)
+    meta = upsert(spark, idx, batch, CFG)
+    stages = metrics.stage_metrics(spark, before)
+    assert stages and all(s["num_tasks"] >= 1 for s in stages)
+    seg = meta.segments[-1]["name"]
+    post = json.load(open(layout.manifest(seg)))["stages"]["postings"]
+    assert post["tokenize_tasks"] == 1 and post["reduce_tasks"] == 1
+    assert post["salt_factor"] == 4  # the cap, not the width
+    _assert_declared_schemas(spark, layout)
+
+    before = metrics.latest_stage_id(spark)
+    for s in layout.meta.segments:
+        for table in ("postings", "dict", "blockmax", "docs"):
+            layout.read(spark, table, s["name"])
+    layout.read(spark, "tombstones")
+    assert metrics.latest_stage_id(spark) == before
+
+    with pytest.raises(AnalysisException):
+        layout.read(spark, "blockmax", "seg_99999")
+
+    meta = compact(spark, idx, CFG)
+    assert meta.n_docs == 60 and len(meta.segments) == 1
+    _assert_declared_schemas(spark, layout)
+    assert _match_set(spark, idx, "widthtoken") == {
+        r.docid for r in batch.select("docid").collect()}

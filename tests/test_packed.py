@@ -6,6 +6,7 @@ in the segment manifest."""
 
 from __future__ import annotations
 
+import hashlib
 import json
 
 import numpy as np
@@ -109,3 +110,44 @@ def test_salt_and_term_hash_are_uniform():
     b = (term_hashes(terms) % np.uint64(16)).astype(int)
     bc = np.bincount(b, minlength=16)
     assert bc.min() > 0.7 * bc.max()
+
+
+# sha256 of the sorted rows (every column, bucket included, columns in
+# name order) of the packed 400-doc fixture, computed before the builder
+# widths were sized from the segment (8 reducers, 5 tokenize splits)
+PINNED_DIGESTS = {
+    "postings": "4fbcc1e922cf2c0f9607d4072a0eb07731511a912328ac5828a08627aa284b56",
+    "blockmax": "92ca779e3f2f6cca7bc988776f80c9e0254f5c96699f971c1551aff83dbfc422",
+    "dict": "9f805529b3dc78d04154661a0d6395ebdfd530fd581b3c5a93177720eb528adb",
+}
+
+
+def _digest(spark, path):
+    cols = sorted(spark.read.parquet(path).columns)
+    return hashlib.sha256(repr(_sorted_rows(spark, path, cols)).encode()).hexdigest()
+
+
+def test_rows_pinned_at_every_width(spark, both_indexes, tmp_path, monkeypatch):
+    """Builder widths change files, never rows: the sized build and a
+    build forced to the widths' caps both reproduce the pinned
+    postings/blockmax/dict rows."""
+    from sphinxsearchengine_spark.index import builder
+
+    pk, _rw = both_indexes
+    parallelism = spark.sparkContext.defaultParallelism
+    man = json.load(open(f"{pk}/manifests/seg_00000.json"))["stages"]["postings"]
+    sized = (man["tokenize_tasks"], man["reduce_tasks"])
+    assert sized == builder.build_widths(400, parallelism, 4, 2)
+
+    wide = str(tmp_path / "wide")
+    monkeypatch.setattr(builder, "BUILD_DOCS_PER_TASK", 1)
+    docs = derive_documents(generate_corpus(spark, 400, partitions=4))
+    build_index(spark, docs, wide, EngineConfig(term_buckets=4), salt_factor=2)
+    man = json.load(open(f"{wide}/manifests/seg_00000.json"))["stages"]["postings"]
+    assert (man["tokenize_tasks"], man["reduce_tasks"]) == (2 * parallelism, 8)
+    assert sized != (2 * parallelism, 8)
+
+    for idx in (pk, wide):
+        for part, want in PINNED_DIGESTS.items():
+            path = getattr(IndexLayout(idx), part)("seg_00000")
+            assert _digest(spark, path) == want, (idx, part)
