@@ -4,8 +4,9 @@
 For each query, runs ``Searcher.search(...).collect()`` n times on a
 pinned Searcher and prints the best wall time, the Spark stages the last
 run started (``metrics.stage_metrics``) and the plan the query recorded
-(``Searcher.last_plan``: blocks kept, τ passes, estimated scorer rows and
-scorer tasks).  ``local[k]`` and the driver heap are sized from this
+(``Searcher.last_plan``: blocks kept, τ passes, estimated scorer rows,
+scorer tasks, and where the plan was scored — ``scorer``: driver or
+executors).  ``local[k]`` and the driver heap are sized from this
 machine's cores and available RAM.  Usage:
 
     python scripts/profile_search.py INDEX_DIR [n_repeats]

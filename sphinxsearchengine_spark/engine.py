@@ -12,13 +12,17 @@ its wordlist in RAM:
 - the hydration projection of the docs table is optionally cached in
   executor memory (``cache_docs=True``).
 
-A warm ``search(...).collect()`` then runs one scorer job (pruned
-postings scan → docid exchange sized from the plan's row estimate →
-Arrow scorer → top-k) plus the hydration join and the rank sort.  The
-driver-side frames it broadcasts are LocalRelations, so they add no
-jobs; the two-pass τ refinement adds a pass-A job only when the plan
-needs more than one scorer task.  ``Searcher.last_plan`` records what
-the last query planned.
+A warm ``search(...).collect()`` of a plan that fits one scorer task
+then runs two Spark jobs: the pruned postings scan, collected in one
+Arrow job and scored in the driver, and one ``docid IN (top-k)`` lookup
+of the docs to hydrate; ranking and the offset run on the driver and
+the result is a LocalRelation.  A larger plan is scored on executors
+(docid exchange sized from the plan's row estimate, Arrow scorer) and
+only its top rows are collected.  The driver-side frames a plan
+broadcasts are LocalRelations, so they add no jobs; the two-pass τ
+refinement adds a pass-A job only when the plan needs more than one
+scorer task.  ``Searcher.last_plan`` records what the last query
+planned and where it was scored (``scorer``).
 
 The pinned state belongs to one meta generation: lifecycle bumps
 ``meta.next_seq`` on every upsert, delete and compact, and each call

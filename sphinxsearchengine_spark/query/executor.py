@@ -13,30 +13,40 @@ Pipeline per query:
 4. postings scan: bucket-pruned, term-pruned, attribute filter (Q6)
    pushed into the parquet scan; tombstone anti-join only when
    tombstones exist (meta fast path)
-5. ONE shuffle: repartition by docid → mapInPandas scorer — fully
-   numpy-vectorized: batch varbyte decode of ALL position lists in one
-   pass, phrase adjacency via sorted-code intersections, LCS chain DP
-   as n_groups vectorized rounds; no per-document Python loop
-6. ORDER BY (Q9) + LIMIT/OFFSET (Q10) → TakeOrderedAndProject
-7. hydration broadcast join back to the docs table (S8), rank preserved
-   (Q15)
+5. scoring (`plan_matches` plans steps 2-4 and the scorer; then): a
+   plan that fits one scorer task and the driver byte budget is
+   collected in one Arrow job, with no exchange, and scored in the
+   driver; any other plan takes ONE shuffle — repartition by docid →
+   mapInPandas.  Both run the same scorer, fully numpy-vectorized: batch
+   varbyte decode of ALL position lists in one pass, phrase adjacency
+   via sorted-code intersections, LCS chain DP as n_groups vectorized
+   rounds; no per-document Python loop
+6. ORDER BY (Q9) + LIMIT/OFFSET (Q10) on the driver: executor-scored
+   plans collect only their top offset+limit rows (TakeOrderedAndProject)
+7. hydration: one ``docid IN (top-k)`` lookup against the docs table
+   (S8), rank preserved (Q15); the result is a LocalRelation
 
 The reference delegates all of this to searchd over one SphinxQL string
 (SphinxSearchEngine_class.php:106-123); here the same contract is a
-declarative Spark plan plus one Arrow-vectorized scoring stage.
+declarative Spark scan plus one Arrow-vectorized scorer, in the driver
+or on executors.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from typing import Callable
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from sphinxsearchengine_spark import codec
+from sphinxsearchengine_spark import codec, npsort
 from sphinxsearchengine_spark.config import (
     BM25_K1,
     EXACT_PREFIX,
@@ -80,6 +90,13 @@ RESULT_COLS = [
     "rank", "docid", "score", "weight_raw", "repo", "path", "commit", "lang",
     "content_sha", "category", "date_insert", "date_modify",
 ]
+# the result contract of `search`, hits or none (RESULT_COLS in order)
+RESULT_SCHEMA = (
+    "rank int NOT NULL, docid long, score double, weight_raw double, "
+    "repo string, path string, commit string, lang string, "
+    "content_sha string, category array<string>, date_insert long, "
+    "date_modify long"
+)
 
 
 def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
@@ -732,6 +749,14 @@ def _make_scorer(n_groups: int, phrase_alts: dict[int, dict[int, int]],
                 .agg(tfd=("tf", "sum"), idf=("idf", "first"))
                 .reset_index()
             )
+            # the per-doc float sum below adds contributions in row order;
+            # ordering them by (gid, tid, uex) makes every score
+            # independent of the order rows reach the scorer (exchange
+            # fetch order, or the driver's collect)
+            per_term = per_term.iloc[npsort.int_order(
+                per_term["uex"].to_numpy(), per_term["tid"].to_numpy(),
+                per_term["gid"].to_numpy(),
+            )]
             per_term["contrib"] = (
                 per_term["idf"] * per_term["tfd"] / (per_term["tfd"] + k1)
             )
@@ -857,7 +882,98 @@ def _make_scorer(n_groups: int, phrase_alts: dict[int, dict[int, int]],
     return score_partition
 
 
-def score_matches(
+@dataclass
+class MatchPlan:
+    """The planning half of `score_matches`, decided on the driver before
+    anything is scored: expansion, the block plan, the pruned and
+    pre-filtered postings scan, the scorer and the row estimate.
+
+    ``blocks`` restricts a single-pass scan to those docid blocks (None:
+    the unfiltered scan); ``two_pass`` says the τ refinement runs
+    instead.  ``info`` is the plan record callers see as
+    ``_ctx["block_plan"]``."""
+
+    info: dict
+    scorer: Callable
+    post: DataFrame
+    map_df: DataFrame
+    shift: int | None
+    scan_rows: int
+    n_map: int
+    blocks: np.ndarray | None = None
+    blk_plan: pd.DataFrame | None = None
+    two_pass: bool = False
+    occupied: int = 0
+
+    def inputs(self, blks, n_tasks: int | None) -> DataFrame:
+        """The scorer's input rows: the scan, restricted to ``blks`` when
+        given, joined with the term mapping — after a docid exchange
+        into ``n_tasks`` partitions, or with none (``n_tasks=None``) for
+        a driver collect."""
+        p = self.post
+        if blks is not None:
+            blk_col = F.expr(f"shiftrightunsigned(docid, {self.shift})")
+            if len(blks) <= 256:
+                p = p.filter(blk_col.isin([int(b) for b in blks]))
+            else:
+                bdf = local_frame(
+                    p.sparkSession, [(int(b),) for b in blks], "blk long"
+                )
+                p = (
+                    p.withColumn("_blk", blk_col)
+                    .join(F.broadcast(bdf), F.col("_blk") == bdf.blk, "left_semi")
+                    .drop("_blk")
+                )
+        c = p.select(
+            "docid", "term", "field", "tf", "exact_tf", "pos_vb",
+            "lang", "date_insert", "date_modify",
+        )
+        if n_tasks is not None:
+            c = c.repartition(n_tasks, "docid")
+        # the mapping join AFTER the exchange (guide §2.3/§8: decide with
+        # small metadata, move heavy bytes once).  A term matched by
+        # several mapping rows — the common kw case is stem + exact-form
+        # (uex) — is duplicated by the join; before the exchange that
+        # would double the shuffled pos_vb payload, while the narrow
+        # broadcast join after it duplicates rows in-stage for free.
+        c = c.join(F.broadcast(self.map_df), "term")
+        c = c.filter((F.col("fld") == -1) | (F.col("field") == F.col("fld")))
+        # uex rows score on exact_tf (surface==term occurrences) — rows
+        # with no exact occurrence are non-matches for that expansion.
+        c = c.withColumn(
+            "tf", F.when(F.col("uex") == 1, F.col("exact_tf")).otherwise(F.col("tf"))
+        ).filter(F.col("tf") > 0)
+        return c.select(
+            "docid", "tid", "gid", "idf", "is_pm", "midx", "pid", "field",
+            "tf", "uex", "pos_vb", "lang", "date_insert", "date_modify",
+        )
+
+
+# Arrow bytes of one scorer-input row besides its position list: four
+# 8-byte columns (docid, idf, date_insert, date_modify), eight 4-byte
+# ones (tid, gid, is_pm, midx, pid, field, tf, uex), the 4-byte offsets
+# of pos_vb and lang, and 24 bytes for the lang string itself.
+_INPUT_ROW_BYTES = 96
+
+
+def _input_bytes_ub(mapping, stats) -> int:
+    """Upper bound on the Arrow bytes of a plan's scorer input, from the
+    dictionary alone.  A term has at most min(hits, df·|FIELDS|) postings
+    rows (one per (doc, field), each holding at least one occurrence)
+    and at most 3·hits bytes of position lists (a varbyte delta below
+    2^_POS_BITS takes ≤ 3 bytes); the mapping join repeats a term's rows
+    once per mapping row.  Block pruning and pre-filters only drop rows,
+    and df/hits sum over every segment (superseded copies included), so
+    this bounds any scan of these mapping rows — unlike a block plan's
+    cap × n_map, which counts only the rarest group's rows per block."""
+    total = 0
+    for m in mapping:
+        df_, hits = stats[m[0]][:2]
+        total += min(hits, df_ * len(FIELDS)) * _INPUT_ROW_BYTES + 3 * hits
+    return total
+
+
+def plan_matches(
     spark: SparkSession,
     index_dir: str,
     query: Query | str,
@@ -867,21 +983,15 @@ def score_matches(
     _ctx: dict | None = None,
     categories: list[str] | None = None,
     match_only: bool = False,
-) -> DataFrame:
-    """Match + score all documents for `query`; returns the scored set
-    (docid, weight_raw, score, …) BEFORE ordering/limit.
-
-    ``match_only`` (facet path) keeps exact AND/phrase matching but
-    skips all scoring work; score columns come back zero.
-
-    ``categories`` appends the reference's '@category_search "__a__"|…'
-    filter group and widens maxScore by the category weight per selected
-    category (SphinxSearchEngine_class.php:98-102, 284-303)."""
+) -> MatchPlan | None:
+    """Plan `score_matches` (same arguments); None when no document can
+    match: a blank query, a group missing from the dictionary, or no
+    docid block holding every group."""
     if isinstance(query, str):
         query = parse_query(query)
     layout = IndexLayout(index_dir)
     if query.blank or not query.groups:
-        return _no_matches(spark)
+        return None
     max_score_val = None
     if categories:
         from sphinxsearchengine_spark.query.parser import with_categories
@@ -894,11 +1004,11 @@ def score_matches(
     dict_pdf = _ctx.get("dict_pdf") if _ctx else None
     mapping, _stats, buckets = _expand_groups(spark, layout, query, dict_pdf)
     if not mapping:
-        return _no_matches(spark)
+        return None
     # not every group found in dict → AND can never be satisfied
     gids_present = {m[1] for m in mapping}
     if len(gids_present) < len(query.groups):
-        return _no_matches(spark)
+        return None
 
     terms = sorted({m[0] for m in mapping})
     # tid: dense int id per term — the scorer's per-term BM25 groupby
@@ -930,6 +1040,21 @@ def score_matches(
         post = post.join(F.broadcast(docs_seq), "docid", "left").filter(
             F.col("seq") == F.col("mseq")
         ).drop("mseq")
+    # Driver-derived SUPERSET pre-filters: they keep every pre-shuffle
+    # row drop the mapping join would perform (the join itself runs
+    # after the exchange, see MatchPlan.inputs)
+    flds = {m[5] for m in mapping}
+    if -1 not in flds:
+        # field-limited query: only mapped fields can survive
+        post = post.filter(F.col("field").isin(sorted(flds)))
+    non_uex_terms = {m[0] for m in mapping if m[6] == 0}
+    if len(non_uex_terms) < len(terms):
+        # some term matches ONLY via its exact form: rows without an
+        # exact occurrence can never survive its uex mapping
+        cond = F.col("exact_tf") > 0
+        if non_uex_terms:
+            cond = cond | F.col("term").isin(sorted(non_uex_terms))
+        post = post.filter(cond)
 
     phrase_alts: dict[int, dict[int, int]] = {}
     for gid, g in enumerate(query.groups):
@@ -943,82 +1068,20 @@ def score_matches(
         len(query.groups), phrase_alts, now_ts, weights_by_fid, prune,
         max_score_val, match_only,
     )
-    shift = meta.block_shift
-    shuffle_n = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
     n_map = len(mapping)
     # rows the unfiltered scan feeds the scorer: each mapping row joins
     # every postings row of its term, about df of them
     scan_rows = sum(_stats[m[0]][0] for m in mapping)
     # what this call planned, for callers that pass a _ctx (SHOW META
-    # style introspection; est_rows is the whole plan's scorer input)
+    # style introspection; est_rows is the whole plan's scorer input,
+    # scorer says where it ran: "driver", "executors" or None)
     info = {"planned": False, "n_blocks": 0, "min_df": None, "passes": 1,
-            "tau": None, "est_rows": scan_rows, "scorer_tasks": 0}
+            "tau": None, "est_rows": scan_rows, "scorer_tasks": 0,
+            "scorer": None, "input_bytes_ub": _input_bytes_ub(mapping, _stats)}
     if _ctx is not None:
         _ctx["block_plan"] = info
-
-    def run(blks, est_rows: int) -> DataFrame:
-        """Score the (optionally block-restricted) postings scan.  The
-        scorer exchange width comes from the estimated rows (guide §2:
-        derive partitioning from the data size, don't pin the local core
-        count): a few thousand rows get one Python task, a broad scan
-        keeps full parallelism."""
-        n_tasks = max(1, min(shuffle_n, -(-int(est_rows) // SCORE_ROWS_PER_TASK)))
-        info["scorer_tasks"] += n_tasks
-        p = post
-        if blks is not None:
-            blk_col = F.expr(f"shiftrightunsigned(docid, {shift})")
-            if len(blks) <= 256:
-                p = p.filter(blk_col.isin([int(b) for b in blks]))
-            else:
-                bdf = local_frame(spark, [(int(b),) for b in blks], "blk long")
-                p = (
-                    p.withColumn("_blk", blk_col)
-                    .join(F.broadcast(bdf), F.col("_blk") == bdf.blk, "left_semi")
-                    .drop("_blk")
-                )
-        # Driver-derived SUPERSET pre-filters, then exchange, then the
-        # mapping join AFTER the exchange (guide §2.3/§8: decide with
-        # small metadata, move heavy bytes once).  A term matched by
-        # several mapping rows — the common kw case is stem + exact-form
-        # (uex) — used to be duplicated by the join BEFORE the docid
-        # exchange, doubling the shuffled pos_vb payload; the broadcast
-        # join is narrow, so joining after the exchange duplicates rows
-        # in-stage at zero shuffle cost.  The pre-filters keep every
-        # pre-shuffle row drop the old join order performed:
-        flds = {m[5] for m in mapping}
-        if -1 not in flds:
-            # field-limited query: only mapped fields can survive
-            p = p.filter(F.col("field").isin(sorted(flds)))
-        all_terms = {m[0] for m in mapping}
-        non_uex_terms = {m[0] for m in mapping if m[6] == 0}
-        if len(non_uex_terms) < len(all_terms):
-            # some term matches ONLY via its exact form: rows without an
-            # exact occurrence can never survive its uex mapping
-            cond = F.col("exact_tf") > 0
-            if non_uex_terms:
-                cond = cond | F.col("term").isin(sorted(non_uex_terms))
-            p = p.filter(cond)
-        c = (
-            p.select(
-                "docid", "term", "field", "tf", "exact_tf", "pos_vb",
-                "lang", "date_insert", "date_modify",
-            )
-            .repartition(n_tasks, "docid")
-            .join(F.broadcast(map_df), "term")
-        )
-        c = c.filter((F.col("fld") == -1) | (F.col("field") == F.col("fld")))
-        # uex rows score on exact_tf (surface==term occurrences) — rows
-        # with no exact occurrence are non-matches for that expansion.
-        c = c.withColumn(
-            "tf", F.when(F.col("uex") == 1, F.col("exact_tf")).otherwise(F.col("tf"))
-        ).filter(F.col("tf") > 0)
-        return (
-            c.select(
-                "docid", "tid", "gid", "idf", "is_pm", "midx", "pid", "field",
-                "tf", "uex", "pos_vb", "lang", "date_insert", "date_modify",
-            )
-            .mapInPandas(scorer, schema=SCORED_SCHEMA)
-        )
+    plan = MatchPlan(info, scorer, post, map_df, meta.block_shift, scan_rows,
+                     n_map)
 
     # --- block-max pruning (north rule: block-max WAND) -------------------
     blk_plan = None
@@ -1030,18 +1093,20 @@ def score_matches(
         )
         info.update(binfo)
     if blk_plan is None:
-        return run(None, scan_rows)
+        return plan
     if len(blk_plan) == 0:
         # no block holds all groups: AND is unsatisfiable, zero scan
         info["est_rows"] = 0
-        return _no_matches(spark)
+        return None
     from sphinxsearchengine_spark.config import POSTINGS_BLOCK
 
-    occupied = min(1 << (64 - shift), meta.n_docs // POSTINGS_BLOCK + 1)
-    plan_rows = int(blk_plan["cap"].sum()) * n_map
-    unfiltered = len(blk_plan) >= 0.7 * occupied
-    info["est_rows"] = scan_rows if unfiltered else plan_rows
-    if (
+    plan.blk_plan = blk_plan
+    plan.occupied = min(1 << (64 - plan.shift), meta.n_docs // POSTINGS_BLOCK + 1)
+    # presence-only filtering: skip when nearly every block survives
+    if len(blk_plan) < 0.7 * plan.occupied:
+        plan.blocks = blk_plan["blk"].to_numpy()
+        info["est_rows"] = int(blk_plan["cap"].sum()) * n_map
+    plan.two_pass = (
         prune is not None
         and prune.get("order") == "weight"
         and prune.get("sort") == "desc"
@@ -1049,63 +1114,197 @@ def score_matches(
         # a plan that fits one scorer task cannot save a task by cutting
         # blocks: pass A would only add a checkpoint and a collect job
         and info["est_rows"] > SCORE_ROWS_PER_TASK
-    ):
-        # two-pass τ refinement: score the highest-ub blocks first, take
-        # the K-th weight as τ, then visit only remaining blocks whose ub
-        # can still beat it.  τ_final ≥ τ_passA, so skipping ub < τ_passA
-        # blocks is exact.
-        k_ = prune["topn"]
-        plan = blk_plan.sort_values("ub", ascending=False, kind="mergesort")
-        csum = plan["cap"].to_numpy().cumsum()
-        take = int(np.searchsorted(csum, max(4 * k_, 256))) + 1
-        if take >= len(plan):
-            return run(plan["blk"].to_numpy(), plan_rows)
-        pass_a = plan.iloc[:take]
-        rest = plan.iloc[take:]
-        scored_a = run(
-            pass_a["blk"].to_numpy(), int(pass_a["cap"].sum()) * n_map
-        ).localCheckpoint()
-        top_a = (
-            scored_a.select("weight_raw")
-            .orderBy(F.col("weight_raw").desc())
-            .limit(k_)
-            .collect()
+    )
+    return plan
+
+
+def _score_on_executors(spark: SparkSession, plan: MatchPlan,
+                        prune: dict | None) -> DataFrame:
+    """The execution half of `score_matches`: a plan's lazy
+    executor-scored frame."""
+    info = plan.info
+    info["scorer"] = "executors"
+    shuffle_n = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
+
+    def run(blks, est_rows: int) -> DataFrame:
+        """Score the (optionally block-restricted) postings scan.  The
+        scorer exchange width comes from the estimated rows (guide §2:
+        derive partitioning from the data size, don't pin the local core
+        count): a few thousand rows get one Python task, a broad scan
+        keeps full parallelism."""
+        n_tasks = max(1, min(shuffle_n, -(-int(est_rows) // SCORE_ROWS_PER_TASK)))
+        info["scorer_tasks"] += n_tasks
+        return plan.inputs(blks, n_tasks).mapInPandas(
+            plan.scorer, schema=SCORED_SCHEMA
         )
-        if len(top_a) >= k_:
-            info["tau"] = top_a[-1].weight_raw
-            rest = rest[rest["ub"] >= info["tau"]]
-        # pass B may be empty when τ cuts every remaining block
-        info.update(passes=2, pass_a_blocks=len(pass_a), pass_b_blocks=len(rest))
-        if len(rest) == 0:
-            return scored_a
-        if len(pass_a) + len(rest) >= 0.7 * occupied:
-            # τ couldn't cut much: finish with an unfiltered scan for
-            # the rest (avoids a huge broadcast block list)
-            ablk = local_frame(
-                spark, [(int(b),) for b in pass_a["blk"]], "ablk long"
-            )
-            return scored_a.unionByName(
-                run(None, scan_rows).join(
-                    F.broadcast(ablk),
-                    F.expr(f"shiftrightunsigned(docid, {shift})") == F.col("ablk"),
-                    "left_anti",
-                )
-            )
+
+    if not plan.two_pass:
+        return run(plan.blocks, info["est_rows"])
+    # two-pass τ refinement: score the highest-ub blocks first, take the
+    # K-th weight as τ, then visit only remaining blocks whose ub can
+    # still beat it.  τ_final ≥ τ_passA, so skipping ub < τ_passA blocks
+    # is exact.
+    k_ = prune["topn"]
+    n_map = plan.n_map
+    ranked = plan.blk_plan.sort_values("ub", ascending=False, kind="mergesort")
+    csum = ranked["cap"].to_numpy().cumsum()
+    take = int(np.searchsorted(csum, max(4 * k_, 256))) + 1
+    if take >= len(ranked):
+        return run(ranked["blk"].to_numpy(), int(csum[-1]) * n_map)
+    pass_a = ranked.iloc[:take]
+    rest = ranked.iloc[take:]
+    scored_a = run(
+        pass_a["blk"].to_numpy(), int(pass_a["cap"].sum()) * n_map
+    ).localCheckpoint()
+    top_a = (
+        scored_a.select("weight_raw")
+        .orderBy(F.col("weight_raw").desc())
+        .limit(k_)
+        .collect()
+    )
+    if len(top_a) >= k_:
+        info["tau"] = top_a[-1].weight_raw
+        rest = rest[rest["ub"] >= info["tau"]]
+    # pass B may be empty when τ cuts every remaining block
+    info.update(passes=2, pass_a_blocks=len(pass_a), pass_b_blocks=len(rest))
+    if len(rest) == 0:
+        return scored_a
+    if len(pass_a) + len(rest) >= 0.7 * plan.occupied:
+        # τ couldn't cut much: finish with an unfiltered scan for the
+        # rest (avoids a huge broadcast block list)
+        ablk = local_frame(
+            spark, [(int(b),) for b in pass_a["blk"]], "ablk long"
+        )
         return scored_a.unionByName(
-            run(rest["blk"].to_numpy(), int(rest["cap"].sum()) * n_map)
+            run(None, plan.scan_rows).join(
+                F.broadcast(ablk),
+                F.expr(f"shiftrightunsigned(docid, {plan.shift})") == F.col("ablk"),
+                "left_anti",
+            )
         )
-    # presence-only filtering: skip when nearly every block survives
-    if unfiltered:
-        return run(None, scan_rows)
-    return run(blk_plan["blk"].to_numpy(), plan_rows)
+    return scored_a.unionByName(
+        run(rest["blk"].to_numpy(), int(rest["cap"].sum()) * n_map)
+    )
+
+
+def score_matches(
+    spark: SparkSession,
+    index_dir: str,
+    query: Query | str,
+    langs: list[str] | None = None,
+    now_ts: int = 0,
+    prune: dict | None = None,
+    _ctx: dict | None = None,
+    categories: list[str] | None = None,
+    match_only: bool = False,
+) -> DataFrame:
+    """Match + score all documents for `query`; returns the scored set
+    (docid, weight_raw, score, …) BEFORE ordering/limit, as a lazy
+    executor-scored frame (`plan_matches`, then `_score_on_executors`).
+
+    ``match_only`` (facet path) keeps exact AND/phrase matching but
+    skips all scoring work; score columns come back zero.
+
+    ``categories`` appends the reference's '@category_search "__a__"|…'
+    filter group and widens maxScore by the category weight per selected
+    category (SphinxSearchEngine_class.php:98-102, 284-303)."""
+    plan = plan_matches(spark, index_dir, query, langs, now_ts, prune, _ctx,
+                        categories, match_only)
+    if plan is None:
+        return _no_matches(spark)
+    return _score_on_executors(spark, plan, prune)
 
 
 def _no_matches(spark: SparkSession) -> DataFrame:
     return local_frame(spark, [], SCORED_SCHEMA)
 
 
+# Byte budget of a driver-scored plan: its scorer input, bounded by
+# `_input_bytes_ub`, is collected to the driver and scored in-process.
+# Measured on a 2k-doc generated index (4-core host, nine query shapes):
+# a collected input row is 77-81 Arrow bytes and the bound runs
+# 1.3-3.9x over the collected bytes of an unpruned scan, so a plan at the
+# row gate (SCORE_ROWS_PER_TASK rows, ~2 MB) bounds to at most ~8 MB;
+# 16 MB admits all of those with 2x headroom.  Scoring in the driver
+# raised its peak RSS by 0.1-2.9x the collected bytes, so the budget
+# caps a query's transient driver memory near 50 MB.
+DRIVER_SCORE_BYTES = 16 << 20
+
+
+def _driver_scorable(plan: MatchPlan) -> bool:
+    """Score in the driver a single-pass plan that would get exactly one
+    scorer task and whose collected input is bounded by the budget: one
+    task crosses the Python boundary only to run the same scorer on the
+    same rows, which costs more than the scoring at warm-query sizes."""
+    info = plan.info
+    return (
+        not plan.two_pass
+        and info["est_rows"] <= SCORE_ROWS_PER_TASK
+        and info["input_bytes_ub"] <= DRIVER_SCORE_BYTES
+    )
+
+
+def _score_in_driver(plan: MatchPlan) -> pd.DataFrame | None:
+    """Collect a plan's scorer input in one Arrow job (no docid
+    exchange) and run the same `score_partition` in-process."""
+    plan.info.update(scorer="driver", scorer_tasks=1)
+    pdf = plan.inputs(plan.blocks, None).toArrow().to_pandas()
+    parts = list(plan.scorer(iter([pdf])))
+    return pd.concat(parts, ignore_index=True) if parts else None
+
+
 _ORDER_COLS = {"weight": "weight_raw", "date_insert": "date_insert",
                "date_modify": "date_modify"}
+# a result's columns from the scorer, and from the docs table
+_TOP_COLS = ["docid", "score", "weight_raw", "lang", "date_insert", "date_modify"]
+_DOC_COLS = ["repo", "path", "commit", "content_sha", "category"]
+
+
+def _top_rows(scored: DataFrame, col: str, desc: bool, n: int) -> pd.DataFrame:
+    """The first n scored rows by (col, docid), collected
+    (TakeOrderedAndProject)."""
+    ordc = F.col(col).desc() if desc else F.col(col).asc()
+    return (
+        scored.select(*_TOP_COLS)
+        .orderBy(ordc, F.col("docid").asc())
+        .limit(n)
+        .toArrow()
+        .to_pandas()
+    )
+
+
+def hydration_frame(spark: SparkSession, index_dir: str, docids: list[int],
+                    _ctx: dict | None = None) -> DataFrame:
+    """The docs columns of a result (S8): one ``docid IN (...)`` lookup
+    against the pinned docs, or `live_docs`."""
+    docs = _ctx.get("docs_df") if _ctx else None
+    if docs is None:
+        docs = live_docs(spark, index_dir)
+    return docs.select("docid", *_DOC_COLS).filter(F.col("docid").isin(docids))
+
+
+def _result(spark: SparkSession, index_dir: str, top: pd.DataFrame | None,
+            col: str, desc: bool, offset: int, limit: int,
+            _ctx: dict | None) -> DataFrame:
+    """Order the collected top rows by (col, docid), rank them, apply
+    the offset (Q10) and hydrate the survivors, all on the driver; the
+    result is a LocalRelation in rank order (Q15)."""
+    if top is None or len(top) <= offset or limit <= 0:
+        return local_frame(spark, [], RESULT_SCHEMA)
+    key = top[col].to_numpy()
+    order = np.lexsort((top["docid"].to_numpy(), -key if desc else key))
+    top = top.iloc[order[offset:offset + limit]]
+    rank = np.arange(offset + 1, offset + 1 + len(top), dtype=np.int32)
+    docs = hydration_frame(spark, index_dir, top["docid"].tolist(), _ctx).toArrow()
+    # inner-join semantics: a scored docid missing from docs drops out
+    at = pc.index_in(pa.array(top["docid"].to_numpy()), value_set=docs["docid"])
+    found = np.asarray(at.is_valid())
+    d = docs.take(at.drop_null())
+    cols = {"rank": rank[found], **{c: d[c] for c in _DOC_COLS},
+            **{c: top[c].to_numpy()[found] for c in _TOP_COLS}}
+    struct = StructType.fromDDL(RESULT_SCHEMA)
+    table = pa.table({c: cols[c] for c in RESULT_COLS}).cast(to_arrow_schema(struct))
+    return spark.createDataFrame(table, schema=struct)
 
 
 def search(
@@ -1122,45 +1321,38 @@ def search(
     _ctx: dict | None = None,
     _scored: DataFrame | None = None,
 ) -> DataFrame:
-    """Full search path → hydrated top-k result DataFrame (rank-ordered).
+    """Full search path → hydrated top-k result DataFrame (rank-ordered,
+    `RESULT_SCHEMA`).
+
+    A plan that fits one scorer task and the driver byte budget is
+    scored in the driver (`_driver_scorable`); any other plan is scored
+    on executors and only its top offset+limit rows are collected.
+    Ranking, the offset and hydration then run on the driver.
 
     order_by/sort whitelist mirrors SphinxSearchEngine_class.php:16-18;
     limit is capped at MATCH_CAP (the reference's limit=1000, :169).
     """
     limit = min(limit, MATCH_CAP)
+    col = _ORDER_COLS.get(order_by, "weight_raw")
+    desc = sort == "desc"
     if _scored is not None:
-        scored = _scored
+        top = _top_rows(_scored, col, desc, offset + limit)
     else:
         prune = {
             "topn": offset + limit,
             "order": order_by if order_by in _ORDER_COLS else "weight",
-            "sort": "desc" if sort == "desc" else "asc",
+            "sort": "desc" if desc else "asc",
         }
-        scored = score_matches(
-            spark, index_dir, query, langs, now_ts, prune=prune, _ctx=_ctx,
-            categories=categories,
-        )
-    col = _ORDER_COLS.get(order_by, "weight_raw")
-    ordc = F.col(col).desc() if sort == "desc" else F.col(col).asc()
-    topk = scored.orderBy(ordc, F.col("docid").asc()).limit(offset + limit)
-    # offset on the already-truncated set (Q10)
-    from pyspark.sql import Window
-
-    w = Window.orderBy(ordc, F.col("docid").asc())
-    topk = (
-        topk.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") > offset)
-    )
-    docs = _ctx.get("docs_df") if _ctx else None
-    if docs is None:
-        docs = live_docs(spark, index_dir)
-    docs = docs.select("docid", "repo", "path", "commit", "content_sha", "category")
-    out = docs.join(
-        F.broadcast(topk.select("rank", "docid", "score", "weight_raw", "lang",
-                                "date_insert", "date_modify")),
-        "docid",
-    )
-    return out.select(*RESULT_COLS).orderBy("rank")  # Q15 rank preserved
+        plan = plan_matches(spark, index_dir, query, langs, now_ts, prune,
+                            _ctx, categories)
+        if plan is None:
+            top = None
+        elif _driver_scorable(plan):
+            top = _score_in_driver(plan)
+        else:
+            top = _top_rows(_score_on_executors(spark, plan, prune), col, desc,
+                            offset + limit)
+    return _result(spark, index_dir, top, col, desc, offset, limit, _ctx)
 
 
 def search_with_meta(spark, index_dir, query, _ctx=None, **kw):
@@ -1169,9 +1361,7 @@ def search_with_meta(spark, index_dir, query, _ctx=None, **kw):
     META time row, SphinxSearchEngine_class.php:202-221).
 
     Single scoring pass: the exhaustive match set is cached, counted for
-    `total`, and re-used for the top-k selection.  The top-k result is
-    pinned with localCheckpoint (data stays on executors) rather than a
-    driver collect round-trip."""
+    `total`, and re-used for the top-k selection."""
     import time as _time
 
     if isinstance(query, str):
@@ -1188,9 +1378,6 @@ def search_with_meta(spark, index_dir, query, _ctx=None, **kw):
     try:
         meta["total"] = scored.count()
         res = search(spark, index_dir, query, _ctx=_ctx, _scored=scored, **kw)
-        # materialize before unpersist (the plan references the cache);
-        # eager localCheckpoint keeps the k rows executor-side
-        res = res.localCheckpoint(eager=True)
     finally:
         scored.unpersist()
     # measured wall of the matching+ranking actions; NEVER part of any

@@ -1,7 +1,7 @@
 """Physical-plan assertions (SURVEY.md §4): the declarative parts of the
 query pipeline must keep their Catalyst optimizations — bucket partition
-pruning + term predicate pushdown on the postings scan, broadcast
-hydration join, column pruning away of the fat pos_vb/content columns
+pruning + term predicate pushdown on the postings scan, a docid-filtered
+hydration lookup, column pruning away of the fat pos_vb/content columns
 where they are not needed."""
 
 from __future__ import annotations
@@ -42,10 +42,72 @@ def test_postings_scan_is_bucket_pruned(spark, idx):
     assert "PushedFilters" in plan and "term" in plan.split("PushedFilters", 1)[1]
 
 
-def test_hydration_join_is_broadcast(spark, idx):
-    res = search(spark, idx, "hotterm", limit=5, now_ts=PINNED_NOW)
-    plan = _plan(res)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+def test_hydration_reads_only_topk_docids(spark, idx):
+    """Hydration is one lookup of the top-k docids: the docid filter
+    reaches the docs scan (pinned cache or parquet) and nothing shuffles;
+    a warm one-task query starts at most 3 Spark stages (the scan job and
+    the lookup)."""
+    from sphinxsearchengine_spark import metrics as M
+    from sphinxsearchengine_spark.engine import Searcher
+    from sphinxsearchengine_spark.query.executor import hydration_frame
+
+    ids = [r.docid for r in search(spark, idx, "hotterm", limit=5,
+                                   now_ts=PINNED_NOW).collect()]
+    assert len(ids) == 5
+
+    def scan_filter(ctx) -> str:
+        """The topmost docs scan of the lookup, after its output columns."""
+        plan = _plan(hydration_frame(spark, idx, ids, ctx))
+        assert "Exchange" not in plan, plan
+        scan = next(ln for ln in plan.splitlines()
+                    if "FileScan" in ln or "InMemoryTableScan" in ln)
+        return scan.split("]", 1)[1]
+
+    # live_docs' parquet scan (before anything caches the docs), then
+    # the Searcher's pinned docs
+    assert "PushedFilters: [In(docid, [" in scan_filter(None)
+    s = Searcher(spark, idx, cache_docs=True)
+    assert f"IN ({ids[0]}," in scan_filter(s._ctx())
+    s.search("hotterm", limit=5, now_ts=PINNED_NOW).collect()
+    sid = M.latest_stage_id(spark)
+    s.search("hotterm", limit=5, now_ts=PINNED_NOW).collect()
+    assert s.last_plan["scorer"] == "driver"
+    assert len(M.stage_metrics(spark, sid)) <= 3
+
+
+# `search`'s result schema before hydration moved to the driver
+PARENT_RESULT_SCHEMA = (
+    "struct<rank:int,docid:bigint,score:double,weight_raw:double,repo:string,"
+    "path:string,commit:string,lang:string,content_sha:string,"
+    "category:array<string>,date_insert:bigint,date_modify:bigint>"
+)
+
+
+def test_result_schema_contract(spark, idx, monkeypatch):
+    """Hits, zero hits and an offset past the end all return exactly
+    RESULT_SCHEMA (the pre-change schema, rank NOT NULL); an empty
+    result is a 0-row LocalRelation that ran no hydration job."""
+    from pyspark.sql.types import StructType
+
+    from sphinxsearchengine_spark.query import executor as X
+
+    want = StructType.fromDDL(X.RESULT_SCHEMA)
+    assert want.simpleString() == PARENT_RESULT_SCHEMA
+    assert want.fieldNames() == X.RESULT_COLS
+    assert [f.nullable for f in want] == [False] + [True] * 11
+    hydrated = []
+    real = X.hydration_frame
+    monkeypatch.setattr(X, "hydration_frame",
+                        lambda *a, **k: hydrated.append(1) or real(*a, **k))
+    for q, kw, n in [("hotterm", {}, 5), ("zzznotaword", {}, 0),
+                     ("hotterm", {"offset": 10_000}, 0)]:
+        hydrated.clear()
+        res = search(spark, idx, q, limit=5, now_ts=PINNED_NOW, **kw)
+        assert res.schema == want, (q, kw)
+        assert len(res.collect()) == n
+        plan = res._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), plan
+        assert len(hydrated) == (1 if n else 0), (q, kw)
 
 
 def test_dict_scan_prunes_columns(spark, idx):
