@@ -1,13 +1,16 @@
 #!/usr/bin/env python
 """Warm-query profile of the engine search path.
 
-For each query, runs ``Searcher.search(...).collect()`` n times on a
-pinned Searcher and prints the best wall time, the Spark stages the last
-run started (``metrics.stage_metrics``) and the plan the query recorded
+Prints what the Searcher pinned (``pinned_bytes``: driver bytes per
+table) and what it did not, and why (``unpinned``).  Then, for each
+query, runs ``Searcher.search(...).collect()`` n times and prints the
+best wall time, the Spark stages the last run started
+(``metrics.stage_metrics``) and the plan the query recorded
 (``Searcher.last_plan``: blocks kept, τ passes, estimated scorer rows,
-scorer tasks, and where the plan was scored — ``scorer``: driver or
-executors).  ``local[k]`` and the driver heap are sized from this
-machine's cores and available RAM.  Usage:
+scorer tasks, where the plan was scored — ``scorer``: driver or
+executors — and where its input came from — ``scan``: pinned or
+spark).  ``local[k]`` and the driver heap are sized from this machine's
+cores and available RAM.  Usage:
 
     python scripts/profile_search.py INDEX_DIR [n_repeats]
 """
@@ -60,7 +63,8 @@ def main() -> int:
 
     searcher = Searcher(spark, idx, cache_docs=True)
     searcher.search("index", limit=20, now_ts=PINNED_NOW).collect()
-    out = {"local": size["k"]}
+    out = {"local": size["k"], "pinned_bytes": searcher.pinned_bytes,
+           "unpinned": searcher.unpinned}
     for name, q in QUERIES.items():
         walls = []
         for _ in range(n):
@@ -72,6 +76,7 @@ def main() -> int:
         out[name] = {
             "best_s": round(min(walls), 3),
             "spark_stages": len(stages),
+            "scan": searcher.last_plan["scan"] if searcher.last_plan else None,
             "plan": searcher.last_plan,
         }
     print(json.dumps(out, indent=1, default=str))

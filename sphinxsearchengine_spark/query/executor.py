@@ -12,19 +12,23 @@ Pipeline per query:
    the reference's client-side maxScore precompute, Q14)
 4. postings scan: bucket-pruned, term-pruned, attribute filter (Q6)
    pushed into the parquet scan; tombstone anti-join only when
-   tombstones exist (meta fast path)
+   tombstones exist (meta fast path).  A `engine.Searcher` whose live
+   postings are pinned in driver RAM reads a driver-scored plan's rows
+   from the pin instead, with the same pre-filters, in numpy
+   (`MatchPlan.pinned_inputs`): no Spark job
 5. scoring (`plan_matches` plans steps 2-4 and the scorer; then): a
-   plan that fits one scorer task and the driver byte budget is
-   collected in one Arrow job, with no exchange, and scored in the
-   driver; any other plan takes ONE shuffle — repartition by docid →
-   mapInPandas.  Both run the same scorer, fully numpy-vectorized: batch
-   varbyte decode of ALL position lists in one pass, phrase adjacency
-   via sorted-code intersections, LCS chain DP as n_groups vectorized
-   rounds; no per-document Python loop
+   plan that fits one scorer task and the driver byte budget is scored
+   in the driver, its input read from the pin or collected in one Arrow
+   job with no exchange; any other plan takes ONE shuffle — repartition
+   by docid → mapInPandas.  Both run the same scorer, fully
+   numpy-vectorized: batch varbyte decode of ALL position lists in one
+   pass, phrase adjacency via sorted-code intersections, LCS chain DP as
+   n_groups vectorized rounds; no per-document Python loop
 6. ORDER BY (Q9) + LIMIT/OFFSET (Q10) on the driver: executor-scored
    plans collect only their top offset+limit rows (TakeOrderedAndProject)
-7. hydration: one ``docid IN (top-k)`` lookup against the docs table
-   (S8), rank preserved (Q15); the result is a LocalRelation
+7. hydration (S8), rank preserved (Q15): from the Searcher's pinned docs
+   columns, or one ``docid IN (top-k)`` lookup against the docs table;
+   the result is a LocalRelation
 
 The reference delegates all of this to searchd over one SphinxQL string
 (SphinxSearchEngine_class.php:106-123); here the same contract is a
@@ -34,7 +38,9 @@ or on executors.
 
 from __future__ import annotations
 
+import mmap
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Callable
 
 import numpy as np
@@ -139,8 +145,38 @@ def _apply_tombstones(spark, layout: IndexLayout, df: DataFrame) -> DataFrame:
     return df.join(F.broadcast(ts), cond, "left_anti")
 
 
-def live_docs(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Current visible document set (newest segment wins, tombstones out).
+def live_postings(spark, layout: IndexLayout, post: DataFrame,
+                  live: DataFrame | None = None) -> DataFrame:
+    """The live rows of a (possibly filtered) postings relation:
+    tombstones out, and newest-segment-wins for updated docs — postings
+    of a docid that appears in a newer segment are dropped (upsert
+    supersedes, SURVEY.md §3.2).  A one-segment index without tombstones
+    passes through unchanged.  ``live``: the live docs' (docid, seq),
+    when the caller holds them as a LocalRelation (the Searcher's docs
+    pin) — one semi-join with it then does both, with no job of its
+    own."""
+    meta = layout.meta
+    if len(meta.segments) == 1 and not meta.n_tombstones:
+        return post
+    if live is not None:
+        return post.join(F.broadcast(live), ["docid", "seq"], "left_semi")
+    if meta.n_tombstones:
+        post = _apply_tombstones(spark, layout, post)
+    if len(meta.segments) > 1:
+        docs_union = _live_union(spark, layout, "docs")
+        if meta.n_tombstones:
+            docs_union = _apply_tombstones(spark, layout, docs_union)
+        docs_seq = docs_union.groupBy("docid").agg(F.max("seq").alias("mseq"))
+        post = post.join(F.broadcast(docs_seq), "docid", "left").filter(
+            F.col("seq") == F.col("mseq")
+        ).drop("mseq")
+    return post
+
+
+def live_docs(spark: SparkSession, index_dir: str,
+              keep_seq: bool = False) -> DataFrame:
+    """Current visible document set (newest segment wins, tombstones out),
+    with the ``seq`` of each doc's segment when ``keep_seq``.
 
     Fast path: a freshly-built/compacted index (one segment, no
     tombstones) is a plain parquet scan — no window, no anti-join.
@@ -148,7 +184,9 @@ def live_docs(spark: SparkSession, index_dir: str) -> DataFrame:
     layout = IndexLayout(index_dir)
     meta = layout.meta
     if len(meta.segments) == 1 and meta.n_tombstones == 0:
-        return layout.read(spark, "docs", meta.segments[0]["name"])
+        seg = meta.segments[0]
+        docs = layout.read(spark, "docs", seg["name"])
+        return docs.withColumn("seq", F.lit(seg["seq"])) if keep_seq else docs
 
     from pyspark.sql import Window
 
@@ -159,7 +197,7 @@ def live_docs(spark: SparkSession, index_dir: str) -> DataFrame:
     return (
         docs.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn", "seq")
+        .drop("_rn", *([] if keep_seq else ["seq"]))
     )
 
 
@@ -384,6 +422,18 @@ def _finish_block_plan(pdf: pd.DataFrame, now_ts: int):
     return pdf[["blk", "ub", "cap"]].reset_index(drop=True)
 
 
+def blockmax_aggs() -> list:
+    """The merge of one (term, blk) across segments, shared by the pinned
+    blockmax frame and the distributed planner."""
+    return [
+        F.sum("n").alias("n"),
+        F.max("max_tf").alias("max_tf"),
+        F.max("max_etf").alias("max_etf"),
+        F.expr("bit_or(fmask)").alias("fmask"),
+        F.max("max_dsum").alias("max_dsum"),
+    ]
+
+
 def _plan_blocks_pandas(bmx_pdf: pd.DataFrame, mapping, n_groups,
                         phrase_alts, now_ts):
     """Driver-RAM twin of the Spark planner below (Searcher pins the
@@ -432,7 +482,7 @@ def _plan_blocks_pandas(bmx_pdf: pd.DataFrame, mapping, n_groups,
     return _finish_block_plan(blocks, now_ts)
 
 
-def _plan_blocks(spark, layout, map_df, mapping, stats, buckets,
+def _plan_blocks(spark, layout, mapping, stats, buckets,
                  n_groups, phrase_alts, now_ts, bmx_pdf=None):
     """Block-max planner (north rule: block-max WAND).
 
@@ -496,7 +546,11 @@ def _plan_blocks(spark, layout, map_df, mapping, stats, buckets,
         bm = _live_union(spark, layout, "blockmax")
         terms = sorted({m[0] for m in mapping})
         bm = bm.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
-        j = bm.join(F.broadcast(map_df), "term")
+        # one row per (term, blk) across segments, merged as the pinned
+        # frame merges them (engine.Searcher._pin_blockmax): a block's ub
+        # then adds each term's contrib once, whatever the segment count
+        bm = bm.groupBy("term", "blk").agg(*blockmax_aggs())
+        j = bm.join(F.broadcast(_map_frame(spark, mapping)), "term")
         j = j.filter((F.col("fld") == -1) | (F.expr("(fmask >> fld) & 1") == 1))
         j = j.filter((F.col("uex") == 0) | (F.col("max_etf") > 0))
         j = j.withColumn(
@@ -882,28 +936,211 @@ def _make_scorer(n_groups: int, phrase_alts: dict[int, dict[int, int]],
     return score_partition
 
 
+# scorer-input columns and their Arrow types: `MatchPlan.inputs` and
+# `MatchPlan.pinned_inputs` both produce exactly these
+_INPUT_SCHEMA = pa.schema([
+    ("docid", pa.int64()), ("tid", pa.int32()), ("gid", pa.int32()),
+    ("idf", pa.float64()), ("is_pm", pa.int32()), ("midx", pa.int32()),
+    ("pid", pa.int32()), ("field", pa.int32()), ("tf", pa.int32()),
+    ("uex", pa.int32()), ("pos_vb", pa.binary()), ("lang", pa.string()),
+    ("date_insert", pa.int64()), ("date_modify", pa.int64()),
+])
+
+
+def _map_frame(spark: SparkSession, mapping) -> DataFrame:
+    """The term mapping as a LocalRelation, each row with ``tid``: its
+    term's rank among the mapped terms — the scorer's per-term BM25
+    groupby key, so the term STRING never crosses the Python boundary
+    (Arrow framing + pandas object-key hashing of ~1M rows per hot
+    query)."""
+    tid = {t: i for i, t in enumerate(sorted({m[0] for m in mapping}))}
+    return local_frame(
+        spark,
+        [m + (tid[m[0]],) for m in mapping],
+        "term string, gid int, idf double, is_pm int, midx int, fld int, "
+        "uex int, pid int, tid int",
+    )
+
+
+# Driver bytes of one pinned postings row besides its position list:
+# the doc row (4), field (1), tf (4) and exact_tf (4), and the 4-byte
+# pos_vb offset.
+PIN_ROW_BYTES = 17
+
+
+def postings_pin_bytes_ub(dict_pdf: pd.DataFrame) -> int:
+    """Upper bound on the bytes of `PinnedPostings`, from the pinned
+    dictionary alone: `_input_bytes_ub` summed over every term, at the
+    pinned row width, plus the term offsets.  df and hits sum over every
+    segment (superseded and tombstoned copies included), so the bound
+    holds for the live rows."""
+    df_ = dict_pdf["df"].to_numpy(dtype=np.int64)
+    hits = dict_pdf["hits"].to_numpy(dtype=np.int64)
+    rows = np.minimum(hits, df_ * len(FIELDS))
+    return int((rows * PIN_ROW_BYTES + 3 * hits).sum()) + 8 * (len(dict_pdf) + 1)
+
+
+def _narrow(a: np.ndarray) -> np.ndarray:
+    """``a`` (non-negative integers) in the narrowest unsigned dtype
+    that holds its maximum."""
+    return a.astype(np.min_scalar_type(int(a.max()) if len(a) else 0))
+
+
+def _mapped(arrays: list[np.ndarray]) -> list[np.ndarray]:
+    """Copies of ``arrays`` in ONE anonymous memory mapping, 8-byte
+    aligned: long-lived pinned columns then sit outside the malloc heap,
+    where they would keep the pages of every later short-lived
+    allocation around them from being returned to the OS, and the
+    whole mapping is unmapped when the last view is dropped."""
+    sizes = [-(-a.nbytes // 8) * 8 for a in arrays]
+    buf = mmap.mmap(-1, max(sum(sizes), 8))
+    out, off = [], 0
+    for a, n in zip(arrays, sizes):
+        v = np.frombuffer(buf, dtype=a.dtype, count=a.size, offset=off)
+        v[...] = a
+        out.append(v)
+        off += n
+    return out
+
+
+@dataclass
+class PinnedPostings:
+    """The live postings in driver RAM (`engine.Searcher`), only the
+    columns the scorer reads, grouped by term: the rows of the pinned
+    dictionary's term ``terms[i]`` are ``starts[i]:starts[i+1]``.  A row
+    names its document by ``drow``, the document's row in ``docs`` (the
+    pinned docs columns, sorted by docid), which also holds the per-doc
+    attributes the scorer reads.  Integer columns take the narrowest
+    dtype their values fit, and all columns share one memory mapping
+    (`_mapped`); ``pos_vb`` is a zero-copy Arrow view of two of them."""
+
+    terms: np.ndarray
+    starts: np.ndarray
+    drow: np.ndarray
+    field: np.ndarray
+    tf: np.ndarray
+    exact_tf: np.ndarray
+    pos_vb: pa.Array
+    docs: pa.Table
+    docid: np.ndarray  # docs["docid"]
+    nbytes: int  # driver bytes held (the docs table not included)
+
+    @classmethod
+    def collect(cls, live: DataFrame, terms: np.ndarray,
+                docs: pa.Table) -> "PinnedPostings":
+        """Collect the live postings rows (`live_postings`) in one Arrow
+        job and group them by their row in ``terms``, the pinned
+        dictionary's sorted term column.  Raises ValueError when a row's
+        term or docid is missing from the pinned dictionary or docs."""
+        t = live.select(
+            "term", "docid", F.col("field").cast("byte").alias("field"),
+            "tf", "exact_tf", "pos_vb",
+        ).toArrow()
+        trow = pc.index_in(t["term"], value_set=pa.array(terms, pa.string()))
+        if trow.null_count:
+            raise ValueError(f"{trow.null_count} postings rows have a term "
+                             "missing from the pinned dictionary")
+        trow = trow.to_numpy()
+        order = np.argsort(trow, kind="stable")
+        starts = np.zeros(len(terms) + 1, dtype=np.int64)
+        np.cumsum(np.bincount(trow, minlength=len(terms)), out=starts[1:])
+        del trow
+        docid = docs["docid"].to_numpy()
+        row_docid = t["docid"].to_numpy()[order]
+        drow = np.searchsorted(docid, row_docid)
+        if len(drow) and (drow.max() >= len(docid)
+                          or (docid[drow] != row_docid).any()):
+            raise ValueError("a postings docid is missing from the pinned docs")
+        del row_docid
+        pos = t["pos_vb"].take(order).combine_chunks()
+        pos_off = np.frombuffer(pos.buffers()[1], dtype=np.int32,
+                                count=len(pos) + 1)
+        pos_data = np.frombuffer(pos.buffers()[2], dtype=np.uint8,
+                                 count=int(pos_off[-1]))
+        cols = _mapped([
+            starts, _narrow(drow),
+            *(_narrow(t[c].to_numpy()[order]) for c in ("field", "tf", "exact_tf")),
+            pos_off, pos_data,
+        ])
+        del t, pos, order
+        pos_vb = pa.Array.from_buffers(
+            pa.binary(), len(cols[5]) - 1,
+            [None, pa.py_buffer(cols[5]), pa.py_buffer(cols[6])])
+        return cls(terms, *cols[:5], pos_vb, docs, docid,
+                   sum(c.nbytes for c in cols))
+
+    def rows(self, term: str) -> np.ndarray:
+        """Row numbers of ``term``'s postings (binary search)."""
+        i = int(np.searchsorted(self.terms, term))
+        if i < len(self.terms) and self.terms[i] == term:
+            return np.arange(self.starts[i], self.starts[i + 1])
+        return np.empty(0, dtype=np.int64)
+
+
 @dataclass
 class MatchPlan:
     """The planning half of `score_matches`, decided on the driver before
-    anything is scored: expansion, the block plan, the pruned and
-    pre-filtered postings scan, the scorer and the row estimate.
+    anything is scored: expansion, the block plan, the pre-filters of
+    the postings scan, the scorer and the row estimate.
 
     ``blocks`` restricts a single-pass scan to those docid blocks (None:
     the unfiltered scan); ``two_pass`` says the τ refinement runs
-    instead.  ``info`` is the plan record callers see as
+    instead.  The pre-filters are driver-derived SUPERSET filters: they
+    keep every row the mapping join keeps.  ``fields``: the mapped
+    fields of a field-limited query (None: any field); ``tf_terms``: the
+    terms some mapping row scores on plain tf (None: all of them — the
+    other terms' rows need an exact occurrence); ``langs``: the Q6
+    attribute filter.  The Spark frames (`map_df`, `post`) are built on
+    first use, so a plan scored from ``pin`` (`pinned_inputs`) builds
+    none.  ``info`` is the plan record callers see as
     ``_ctx["block_plan"]``."""
 
     info: dict
     scorer: Callable
-    post: DataFrame
-    map_df: DataFrame
+    spark: SparkSession
+    layout: IndexLayout
+    mapping: list[tuple]
+    terms: list[str]
+    buckets: list[int]
     shift: int | None
     scan_rows: int
-    n_map: int
+    fields: list[int] | None = None
+    tf_terms: list[str] | None = None
+    langs: list[str] | None = None
+    postings_df: DataFrame | None = None
+    pin: PinnedPostings | None = None
     blocks: np.ndarray | None = None
     blk_plan: pd.DataFrame | None = None
     two_pass: bool = False
     occupied: int = 0
+
+    @property
+    def n_map(self) -> int:
+        return len(self.mapping)
+
+    @cached_property
+    def map_df(self) -> DataFrame:
+        return _map_frame(self.spark, self.mapping)
+
+    @cached_property
+    def post(self) -> DataFrame:
+        """The pruned, pre-filtered scan of the live postings."""
+        p = self.postings_df
+        if p is None:
+            p = _live_union(self.spark, self.layout, "postings")
+        p = p.filter(F.col("bucket").isin(self.buckets)
+                     & F.col("term").isin(self.terms))
+        if self.langs:
+            p = p.filter(F.col("lang").isin(self.langs))  # Q6 pushdown
+        p = live_postings(self.spark, self.layout, p)
+        if self.fields is not None:
+            p = p.filter(F.col("field").isin(self.fields))
+        if self.tf_terms is not None:
+            cond = F.col("exact_tf") > 0
+            if self.tf_terms:
+                cond = cond | F.col("term").isin(self.tf_terms)
+            p = p.filter(cond)
+        return p
 
     def inputs(self, blks, n_tasks: int | None) -> DataFrame:
         """The scorer's input rows: the scan, restricted to ``blks`` when
@@ -943,10 +1180,67 @@ class MatchPlan:
         c = c.withColumn(
             "tf", F.when(F.col("uex") == 1, F.col("exact_tf")).otherwise(F.col("tf"))
         ).filter(F.col("tf") > 0)
-        return c.select(
-            "docid", "tid", "gid", "idf", "is_pm", "midx", "pid", "field",
-            "tf", "uex", "pos_vb", "lang", "date_insert", "date_modify",
-        )
+        return c.select(*_INPUT_SCHEMA.names)
+
+    def pinned_inputs(self, blks) -> pd.DataFrame:
+        """The rows ``inputs(blks, None)`` collects, read from ``pin``
+        with no Spark job: the same pre-filters, mapping expansion and
+        uex tf switch, in numpy.  Returns exactly the columns and dtypes
+        of ``inputs(blks, None).toArrow().to_pandas()`` (row order
+        aside, which the scorer ignores)."""
+        pin = self.pin
+        # per pinned doc: passes the langs and block filters
+        keep_doc = None
+        if self.langs:
+            keep_doc = pc.is_in(pin.docs["lang"],
+                                value_set=pa.array(self.langs)).to_numpy()
+        if blks is not None:
+            blk = (pin.docid.astype(np.uint64) >> np.uint64(self.shift)).astype(np.int64)
+            in_blk = np.isin(blk, blks)
+            keep_doc = in_blk if keep_doc is None else keep_doc & in_blk
+        cand = {}
+        for t in self.terms:
+            r = pin.rows(t)
+            if keep_doc is not None:
+                r = r[keep_doc[pin.drow[r]]]
+            if self.fields is not None:
+                r = r[np.isin(pin.field[r], self.fields)]
+            if self.tf_terms is not None and t not in self.tf_terms:
+                r = r[pin.exact_tf[r] > 0]
+            cand[t] = r
+        tid = {t: i for i, t in enumerate(self.terms)}
+        rows, tfs, consts = [], [], []
+        for term, gid, idf, is_pm, midx, fld, uex, pid in self.mapping:
+            r = cand[term]
+            if fld != -1:
+                r = r[pin.field[r] == fld]
+            tf = (pin.exact_tf if uex else pin.tf)[r]
+            rows.append(r[tf > 0])
+            tfs.append(tf[tf > 0])
+            consts.append((tid[term], gid, idf, is_pm, midx, pid, uex))
+        n = [len(r) for r in rows]
+        r = np.concatenate(rows)
+        drow = pa.array(pin.drow[r])
+        const = {
+            name: np.repeat(np.asarray([c[k] for c in consts], dtype=dt), n)
+            for k, (name, dt) in enumerate([
+                ("tid", np.int32), ("gid", np.int32), ("idf", np.float64),
+                ("is_pm", np.int32), ("midx", np.int32), ("pid", np.int32),
+                ("uex", np.int32),
+            ])
+        }
+        cols = {
+            "docid": pin.docid[pin.drow[r]],
+            **const,
+            "field": pin.field[r].astype(np.int32),
+            "tf": np.concatenate(tfs).astype(np.int32),
+            "pos_vb": pin.pos_vb.take(pa.array(r)),
+            **{c: pin.docs[c].take(drow)
+               for c in ("lang", "date_insert", "date_modify")},
+        }
+        return pa.Table.from_arrays(
+            [cols[f.name] for f in _INPUT_SCHEMA], schema=_INPUT_SCHEMA
+        ).to_pandas()
 
 
 # Arrow bytes of one scorer-input row besides its position list: four
@@ -971,6 +1265,16 @@ def _input_bytes_ub(mapping, stats) -> int:
         df_, hits = stats[m[0]][:2]
         total += min(hits, df_ * len(FIELDS)) * _INPUT_ROW_BYTES + 3 * hits
     return total
+
+
+def _phrase_alts(query: Query) -> dict[int, dict[int, int]]:
+    """gid -> {pid -> member count} of every phrase alternative."""
+    out: dict[int, dict[int, int]] = {}
+    for gid, g in enumerate(query.groups):
+        phrases = [a for a in g.alts if a.kind == "phrase"]
+        for pid, a in enumerate(phrases):
+            out.setdefault(gid, {})[pid] = len(a.words)
+    return out
 
 
 def plan_matches(
@@ -1001,8 +1305,9 @@ def plan_matches(
         max_score_val = ranker.max_score(base_n, n_categories=len(categories))
 
     meta = layout.meta
-    dict_pdf = _ctx.get("dict_pdf") if _ctx else None
-    mapping, _stats, buckets = _expand_groups(spark, layout, query, dict_pdf)
+    ctx = _ctx or {}
+    mapping, _stats, buckets = _expand_groups(spark, layout, query,
+                                              ctx.get("dict_pdf"))
     if not mapping:
         return None
     # not every group found in dict → AND can never be satisfied
@@ -1011,85 +1316,47 @@ def plan_matches(
         return None
 
     terms = sorted({m[0] for m in mapping})
-    # tid: dense int id per term — the scorer's per-term BM25 groupby
-    # key, so the term STRING never crosses the Python boundary (Arrow
-    # framing + pandas object-key hashing of ~1M rows per hot query)
-    _tid = {t: i for i, t in enumerate(terms)}
-    map_df = local_frame(
-        spark,
-        [m + (_tid[m[0]],) for m in mapping],
-        "term string, gid int, idf double, is_pm int, midx int, fld int, "
-        "uex int, pid int, tid int",
-    )
-
-    post = (_ctx or {}).get("postings_df")
-    if post is None:
-        post = _live_union(spark, layout, "postings")
-    post = post.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
-    if langs:
-        post = post.filter(F.col("lang").isin(langs))  # Q6 pushdown
-    if meta.n_tombstones:
-        post = _apply_tombstones(spark, layout, post)
-    # newest-segment-wins for updated docs: drop postings of docids that
-    # appear in a newer segment (upsert supersedes, SURVEY.md §3.2)
-    if len(meta.segments) > 1:
-        docs_union = _live_union(spark, layout, "docs")
-        if meta.n_tombstones:
-            docs_union = _apply_tombstones(spark, layout, docs_union)
-        docs_seq = docs_union.groupBy("docid").agg(F.max("seq").alias("mseq"))
-        post = post.join(F.broadcast(docs_seq), "docid", "left").filter(
-            F.col("seq") == F.col("mseq")
-        ).drop("mseq")
-    # Driver-derived SUPERSET pre-filters: they keep every pre-shuffle
-    # row drop the mapping join would perform (the join itself runs
-    # after the exchange, see MatchPlan.inputs)
+    # the scan's pre-filters (MatchPlan): a field-limited query keeps
+    # only mapped fields; a term matched ONLY via its exact form keeps
+    # only rows with an exact occurrence
     flds = {m[5] for m in mapping}
-    if -1 not in flds:
-        # field-limited query: only mapped fields can survive
-        post = post.filter(F.col("field").isin(sorted(flds)))
-    non_uex_terms = {m[0] for m in mapping if m[6] == 0}
-    if len(non_uex_terms) < len(terms):
-        # some term matches ONLY via its exact form: rows without an
-        # exact occurrence can never survive its uex mapping
-        cond = F.col("exact_tf") > 0
-        if non_uex_terms:
-            cond = cond | F.col("term").isin(sorted(non_uex_terms))
-        post = post.filter(cond)
+    tf_terms = sorted({m[0] for m in mapping if m[6] == 0})
 
-    phrase_alts: dict[int, dict[int, int]] = {}
-    for gid, g in enumerate(query.groups):
-        pc = 0
-        for a in g.alts:
-            if a.kind == "phrase":
-                phrase_alts.setdefault(gid, {})[pc] = len(a.words)
-                pc += 1
+    phrase_alts = _phrase_alts(query)
     weights_by_fid = [FIELD_WEIGHTS[name] for name in FIELD_NAMES]
     scorer = _make_scorer(
         len(query.groups), phrase_alts, now_ts, weights_by_fid, prune,
         max_score_val, match_only,
     )
-    n_map = len(mapping)
     # rows the unfiltered scan feeds the scorer: each mapping row joins
     # every postings row of its term, about df of them
     scan_rows = sum(_stats[m[0]][0] for m in mapping)
     # what this call planned, for callers that pass a _ctx (SHOW META
     # style introspection; est_rows is the whole plan's scorer input,
-    # scorer says where it ran: "driver", "executors" or None)
+    # scorer says where it ran: "driver", "executors" or None, and scan
+    # where its input came from: "pinned", "spark" or None)
     info = {"planned": False, "n_blocks": 0, "min_df": None, "passes": 1,
             "tau": None, "est_rows": scan_rows, "scorer_tasks": 0,
-            "scorer": None, "input_bytes_ub": _input_bytes_ub(mapping, _stats)}
+            "scorer": None, "scan": None,
+            "input_bytes_ub": _input_bytes_ub(mapping, _stats)}
     if _ctx is not None:
         _ctx["block_plan"] = info
-    plan = MatchPlan(info, scorer, post, map_df, meta.block_shift, scan_rows,
-                     n_map)
+    plan = MatchPlan(
+        info, scorer, spark, layout, mapping, terms, buckets,
+        meta.block_shift, scan_rows,
+        fields=None if -1 in flds else sorted(flds),
+        tf_terms=None if len(tf_terms) == len(terms) else tf_terms,
+        langs=langs or None, postings_df=ctx.get("postings_df"),
+        pin=ctx.get("postings_pin"),
+    )
 
     # --- block-max pruning (north rule: block-max WAND) -------------------
     blk_plan = None
-    if not (_ctx or {}).get("no_blockmax", False):
+    if not ctx.get("no_blockmax", False):
         blk_plan, binfo = _plan_blocks(
-            spark, layout, map_df, mapping, _stats, buckets,
+            spark, layout, mapping, _stats, buckets,
             len(query.groups), phrase_alts, now_ts,
-            bmx_pdf=(_ctx or {}).get("blockmax_pdf"),
+            bmx_pdf=ctx.get("blockmax_pdf"),
         )
         info.update(binfo)
     if blk_plan is None:
@@ -1105,7 +1372,7 @@ def plan_matches(
     # presence-only filtering: skip when nearly every block survives
     if len(blk_plan) < 0.7 * plan.occupied:
         plan.blocks = blk_plan["blk"].to_numpy()
-        info["est_rows"] = int(blk_plan["cap"].sum()) * n_map
+        info["est_rows"] = int(blk_plan["cap"].sum()) * plan.n_map
     plan.two_pass = (
         prune is not None
         and prune.get("order") == "weight"
@@ -1123,7 +1390,7 @@ def _score_on_executors(spark: SparkSession, plan: MatchPlan,
     """The execution half of `score_matches`: a plan's lazy
     executor-scored frame."""
     info = plan.info
-    info["scorer"] = "executors"
+    info.update(scorer="executors", scan="spark")
     shuffle_n = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
 
     def run(blks, est_rows: int) -> DataFrame:
@@ -1245,10 +1512,14 @@ def _driver_scorable(plan: MatchPlan) -> bool:
 
 
 def _score_in_driver(plan: MatchPlan) -> pd.DataFrame | None:
-    """Collect a plan's scorer input in one Arrow job (no docid
-    exchange) and run the same `score_partition` in-process."""
-    plan.info.update(scorer="driver", scorer_tasks=1)
-    pdf = plan.inputs(plan.blocks, None).toArrow().to_pandas()
+    """Run the same `score_partition` in-process on a plan's scorer
+    input: read from the pinned postings with no Spark job, or else
+    collected in one Arrow job (no docid exchange)."""
+    if plan.pin is not None:
+        scan, pdf = "pinned", plan.pinned_inputs(plan.blocks)
+    else:
+        scan, pdf = "spark", plan.inputs(plan.blocks, None).toArrow().to_pandas()
+    plan.info.update(scorer="driver", scorer_tasks=1, scan=scan)
     parts = list(plan.scorer(iter([pdf])))
     return pd.concat(parts, ignore_index=True) if parts else None
 
@@ -1273,6 +1544,39 @@ def _top_rows(scored: DataFrame, col: str, desc: bool, n: int) -> pd.DataFrame:
     )
 
 
+# the pinned docs columns (`pin_docs`): a result's, the per-doc
+# attributes the scorer reads, and the seq of the doc's live segment
+_PIN_DOC_COLS = ["docid", *_DOC_COLS, "lang", "date_insert", "date_modify", "seq"]
+# Arrow bytes of one pinned docs row besides its strings: three 8-byte
+# columns (docid, date_insert, date_modify), the 4-byte seq, the 4-byte
+# offsets of six string or list columns, and a validity bit per column
+# (2 bytes).  A category element adds a 4-byte offset to its string.
+_DOC_ROW_BYTES = 54
+
+
+def docs_bytes_ub(spark: SparkSession, layout: IndexLayout) -> int:
+    """Upper bound on the Arrow bytes of `pin_docs`: one aggregate job
+    over every segment's docs (superseded and tombstoned copies
+    included), reading only the pinned columns."""
+    docs = _live_union(spark, layout, "docs")
+    if docs is None:
+        return 0
+    n_str = sum(F.coalesce(F.octet_length(c), F.lit(0))
+                for c in ("repo", "path", "commit", "content_sha", "lang"))
+    n_cat = F.coalesce(F.expr(
+        "aggregate(category, 0L, (a, x) -> a + coalesce(octet_length(x), 0) + 4)"
+    ), F.lit(0))
+    n, n_bytes = docs.agg(F.count(F.lit(1)), F.sum(n_str + n_cat)).first()
+    return n * _DOC_ROW_BYTES + (n_bytes or 0)
+
+
+def pin_docs(spark: SparkSession, index_dir: str) -> pa.Table:
+    """The live docs' `_PIN_DOC_COLS`, collected in one Arrow job and
+    sorted by docid, one chunk per column."""
+    t = live_docs(spark, index_dir, keep_seq=True).select(*_PIN_DOC_COLS).toArrow()
+    return t.take(pc.sort_indices(t["docid"])).combine_chunks()
+
+
 def hydration_frame(spark: SparkSession, index_dir: str, docids: list[int],
                     _ctx: dict | None = None) -> DataFrame:
     """The docs columns of a result (S8): one ``docid IN (...)`` lookup
@@ -1287,15 +1591,18 @@ def _result(spark: SparkSession, index_dir: str, top: pd.DataFrame | None,
             col: str, desc: bool, offset: int, limit: int,
             _ctx: dict | None) -> DataFrame:
     """Order the collected top rows by (col, docid), rank them, apply
-    the offset (Q10) and hydrate the survivors, all on the driver; the
-    result is a LocalRelation in rank order (Q15)."""
+    the offset (Q10) and hydrate the survivors from the pinned docs
+    (``_ctx["docs_pin"]``) or one `hydration_frame` lookup, all on the
+    driver; the result is a LocalRelation in rank order (Q15)."""
     if top is None or len(top) <= offset or limit <= 0:
         return local_frame(spark, [], RESULT_SCHEMA)
     key = top[col].to_numpy()
     order = np.lexsort((top["docid"].to_numpy(), -key if desc else key))
     top = top.iloc[order[offset:offset + limit]]
     rank = np.arange(offset + 1, offset + 1 + len(top), dtype=np.int32)
-    docs = hydration_frame(spark, index_dir, top["docid"].tolist(), _ctx).toArrow()
+    docs = _ctx.get("docs_pin") if _ctx else None
+    if docs is None:
+        docs = hydration_frame(spark, index_dir, top["docid"].tolist(), _ctx).toArrow()
     # inner-join semantics: a scored docid missing from docs drops out
     at = pc.index_in(pa.array(top["docid"].to_numpy()), value_set=docs["docid"])
     found = np.asarray(at.is_valid())

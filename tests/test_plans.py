@@ -42,11 +42,13 @@ def test_postings_scan_is_bucket_pruned(spark, idx):
     assert "PushedFilters" in plan and "term" in plan.split("PushedFilters", 1)[1]
 
 
-def test_hydration_reads_only_topk_docids(spark, idx):
+def test_hydration_reads_only_topk_docids(spark, idx, monkeypatch):
     """Hydration is one lookup of the top-k docids: the docid filter
-    reaches the docs scan (pinned cache or parquet) and nothing shuffles;
-    a warm one-task query starts at most 3 Spark stages (the scan job and
-    the lookup)."""
+    reaches the docs scan (parquet, or the executor cache of a Searcher
+    over the driver pin budget) and nothing shuffles; a Searcher with
+    the docs pinned hydrates in the driver, so a warm one-task query
+    starts no Spark stage at all."""
+    from sphinxsearchengine_spark import engine
     from sphinxsearchengine_spark import metrics as M
     from sphinxsearchengine_spark.engine import Searcher
     from sphinxsearchengine_spark.query.executor import hydration_frame
@@ -64,15 +66,20 @@ def test_hydration_reads_only_topk_docids(spark, idx):
         return scan.split("]", 1)[1]
 
     # live_docs' parquet scan (before anything caches the docs), then
-    # the Searcher's pinned docs
+    # the cached docs of a Searcher over the pin budget
     assert "PushedFilters: [In(docid, [" in scan_filter(None)
+    with monkeypatch.context() as mp:
+        mp.setattr(engine, "DRIVER_PIN_BYTES", 0)
+        over = Searcher(spark, idx, cache_docs=True)
+    assert over._docs_pin is None and over._docs_cached is not None
+    assert f"IN ({ids[0]}," in scan_filter(over._ctx())
     s = Searcher(spark, idx, cache_docs=True)
-    assert f"IN ({ids[0]}," in scan_filter(s._ctx())
+    assert s._docs_pin is not None and s._docs_cached is None
     s.search("hotterm", limit=5, now_ts=PINNED_NOW).collect()
     sid = M.latest_stage_id(spark)
     s.search("hotterm", limit=5, now_ts=PINNED_NOW).collect()
-    assert s.last_plan["scorer"] == "driver"
-    assert len(M.stage_metrics(spark, sid)) <= 3
+    assert (s.last_plan["scorer"], s.last_plan["scan"]) == ("driver", "pinned")
+    assert len(M.stage_metrics(spark, sid)) == 0
 
 
 # `search`'s result schema before hydration moved to the driver
