@@ -142,7 +142,7 @@ class Searcher:
         # lists no files and infers no schema before its scan
         self._postings_df = X._live_union(spark, layout, "postings")
         if self.dict_cache_rows:
-            # the docs pin needs no dictionary: its jobs run beside the
+            # the docs pin needs no dictionary: its collect runs beside the
             # dict and blockmax collects
             with ThreadPoolExecutor(1) as pool:
                 docs_ub = pool.submit(self._pin_docs)
@@ -202,7 +202,11 @@ class Searcher:
     def _pin_docs(self) -> int:
         """Pin the docs columns (hydration and the scorer's attributes)
         when their bound fits DRIVER_PIN_BYTES; returns the bound."""
-        docs_ub = X.docs_bytes_ub(self.spark, self.layout)
+        try:
+            docs_ub = X.docs_bytes_ub(self.layout)
+        except ValueError as e:  # counts as over budget
+            self.unpinned["docs"] = f"ValueError: {e}"
+            return 0
         if docs_ub > DRIVER_PIN_BYTES:
             self.unpinned["docs"] = (
                 f"bound {docs_ub} B > DRIVER_PIN_BYTES {DRIVER_PIN_BYTES} B")

@@ -38,7 +38,7 @@ class OracleEngine:
         from sphinxsearchengine_spark.text.tokenizer import tokenize
 
         # term -> docid -> field -> (tf, positions, exact_tf)
-        # (exact-merged rows, mirroring index.builder._tokenize_batch)
+        # (exact-merged rows, mirroring index.builder._batch_postings_columns)
         self.postings: dict[str, dict[int, dict[int, tuple]]] = (
             defaultdict(lambda: defaultdict(dict))
         )

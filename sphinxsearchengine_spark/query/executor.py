@@ -1554,20 +1554,33 @@ _PIN_DOC_COLS = ["docid", *_DOC_COLS, "lang", "date_insert", "date_modify", "seq
 _DOC_ROW_BYTES = 54
 
 
-def docs_bytes_ub(spark: SparkSession, layout: IndexLayout) -> int:
-    """Upper bound on the Arrow bytes of `pin_docs`: one aggregate job
-    over every segment's docs (superseded and tombstoned copies
-    included), reading only the pinned columns."""
-    docs = _live_union(spark, layout, "docs")
-    if docs is None:
-        return 0
+def doc_pin_bytes():
+    """Arrow bytes of one pinned docs row, as a Column over the docs
+    table: `_DOC_ROW_BYTES` plus its strings' bytes.  The builder sums it
+    on each segment's docs write (``pin_bytes_ub`` in the manifest)."""
     n_str = sum(F.coalesce(F.octet_length(c), F.lit(0))
                 for c in ("repo", "path", "commit", "content_sha", "lang"))
     n_cat = F.coalesce(F.expr(
         "aggregate(category, 0L, (a, x) -> a + coalesce(octet_length(x), 0) + 4)"
     ), F.lit(0))
-    n, n_bytes = docs.agg(F.count(F.lit(1)), F.sum(n_str + n_cat)).first()
-    return n * _DOC_ROW_BYTES + (n_bytes or 0)
+    return F.lit(_DOC_ROW_BYTES) + n_str + n_cat
+
+
+def docs_bytes_ub(layout: IndexLayout) -> int:
+    """Upper bound on the Arrow bytes of `pin_docs`: the sum of the
+    bounds every segment's docs write recorded (superseded and
+    tombstoned copies included), with no Spark job.  Raises ValueError
+    naming a segment whose manifest records none."""
+    from sphinxsearchengine_spark import fs
+
+    total = 0
+    for seg in layout.meta.segments:
+        man = fs.read_json(layout.manifest(seg["name"]), default={})
+        ub = man.get("stages", {}).get("docs", {}).get("pin_bytes_ub")
+        if ub is None:
+            raise ValueError(f"segment {seg['name']} records no docs pin bound")
+        total += ub
+    return total
 
 
 def pin_docs(spark: SparkSession, index_dir: str) -> pa.Table:

@@ -1,25 +1,35 @@
-"""Vectorized build tokenizer must emit the EXACT row set of the
-reference-semantics twin (VERDICT r1 #3: bit-identical postings)."""
+"""The vectorized build tokenizer must emit EXACTLY the postings rows of
+the single-node oracle (VERDICT r1 #3: bit-identical postings)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pytest
 
-from sphinxsearchengine_spark.index.builder import (
-    _tokenize_batch,
-    _tokenize_batch_ref,
-)
+from sphinxsearchengine_spark.index.builder import _batch_postings_columns
+
+from oracle_rows import POSTING_COLS, oracle_postings
 
 
-def _canon(frames: list[pd.DataFrame]) -> pd.DataFrame:
-    df = pd.concat(frames, ignore_index=True)
-    df["pos_hex"] = df["pos_vb"].map(bytes.hex)
-    df = df.drop(columns=["pos_vb"])
-    return (
-        df.sort_values(["docid", "field", "term"])
-        .reset_index(drop=True)
-    )
+def _rows(pdf: pd.DataFrame) -> pd.DataFrame:
+    """`_batch_postings_columns` as postings rows, the shared position
+    blob sliced per posting by its pos_len, sorted like the oracle's."""
+    out = _batch_postings_columns(pdf)
+    ends = np.cumsum(out["pos_len"])
+    starts = ends - out["pos_len"]
+    blob = out["pos_blob"]
+    rows = pd.DataFrame({
+        **{c: out[c] for c in POSTING_COLS if c != "pos_vb"},
+        "pos_vb": [blob[a:b] for a, b in zip(starts.tolist(), ends.tolist())],
+    })[POSTING_COLS]
+    return rows.sort_values(["term", "field", "docid"]).reset_index(drop=True)
+
+
+def _assert_equals_oracle(pdf: pd.DataFrame) -> None:
+    got, want = _rows(pdf), oracle_postings(pdf)
+    assert len(got) == len(want) > 0
+    pd.testing.assert_frame_equal(got, want)
 
 
 def _doc_batch(rows) -> pd.DataFrame:
@@ -39,10 +49,7 @@ def test_vectorized_equals_reference_on_corpus(spark):
         "docid", "path", "lang", "content", "category_search",
         "date_insert", "date_modify",
     )
-    pdf = docs.toPandas()
-    got = _canon(list(_tokenize_batch(iter([pdf]))))
-    want = _canon(list(_tokenize_batch_ref(iter([pdf]))))
-    pd.testing.assert_frame_equal(got, want)
+    _assert_equals_oracle(docs.toPandas())
 
 
 @pytest.mark.parametrize(
@@ -62,13 +69,10 @@ def test_vectorized_equals_reference_edge_cases(text):
         (1, "src/p.py", "python", text, "__cat__ __python__", 100, 200),
         (2, "", "go", "plain words only here", "", 300, 400),
     ]
-    pdf = _doc_batch(rows)
-    got = _canon(list(_tokenize_batch(iter([pdf]))))
-    want = _canon(list(_tokenize_batch_ref(iter([pdf]))))
-    pd.testing.assert_frame_equal(got, want)
+    _assert_equals_oracle(_doc_batch(rows))
 
 
 def test_vectorized_empty_batch():
     pdf = _doc_batch([])
-    out = pd.concat(list(_tokenize_batch(iter([pdf]))), ignore_index=True)
-    assert len(out) == 0
+    assert len(_rows(pdf)) == 0
+    assert len(oracle_postings(pdf)) == 0

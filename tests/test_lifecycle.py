@@ -133,6 +133,10 @@ def test_build_resume(spark, tmp_path):
     man_path = IndexLayout(idx).manifest("seg_00000")
     manifest = json.load(open(man_path))
     assert set(manifest["stages"]) == {"docs", "postings", "blockmax", "dict"}
+    # what the manifest's readers take: perfbench's manifest_split every
+    # stage's `ts`, bench.py the postings stage's `packed`
+    assert all("ts" in st for st in manifest["stages"].values())
+    assert manifest["stages"]["postings"]["packed"] is True
 
     # simulate a crash after 'docs': wipe the completed-flag of later stages
     for st in ["postings", "blockmax", "dict"]:
@@ -148,6 +152,63 @@ def test_build_resume(spark, tmp_path):
     after = search(spark, idx, "hotterm", limit=5, now_ts=PINNED_NOW).collect()
     assert [r.docid for r in before] == [r.docid for r in after]
     assert [r.score for r in before] == [r.score for r in after]
+
+
+def _index_rows(spark, layout, seg):
+    out = {}
+    for table in ("postings", "blockmax", "dict"):
+        df = spark.read.parquet(getattr(layout, table)(seg))
+        out[table] = sorted(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+    return out
+
+
+def _mtimes(path):
+    import os
+
+    return {os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, files in os.walk(path) for f in files}
+
+
+def test_resume_crash_windows(spark, tmp_path):
+    """Each manifest a crash can leave resumes to the same rows and
+    reruns only what it must: postings recorded without blockmax and
+    dict reruns the fused postings+blockmax stage, a missing dict reruns
+    only the dict, and a complete manifest starts no Spark stage."""
+    import json
+
+    from sphinxsearchengine_spark import metrics
+    from sphinxsearchengine_spark.index.builder import build_segment
+
+    idx, seg = str(tmp_path / "idx"), "seg_00000"
+    docs = derive_documents(generate_corpus(spark, 60, partitions=2))
+    build_index(spark, docs, idx, CFG, salt_factor=2)
+    layout = IndexLayout(idx)
+    man_path = layout.manifest(seg)
+    want = _index_rows(spark, layout, seg)
+
+    def resume(drop):
+        manifest = json.load(open(man_path))
+        for st in drop:
+            manifest["stages"].pop(st)
+        json.dump(manifest, open(man_path, "w"))
+        return manifest["stages"], build_segment(spark, docs, idx, seg, CFG,
+                                                 salt_factor=2)
+
+    kept, stages = resume(["blockmax", "dict"])
+    assert stages["postings"]["ts"] > kept["postings"]["ts"]
+    assert stages["postings"]["ts"] == stages["blockmax"]["ts"]
+    assert _index_rows(spark, layout, seg) == want
+
+    files = {t: _mtimes(getattr(layout, t)(seg)) for t in ("postings", "blockmax")}
+    kept, stages = resume(["dict"])
+    assert {t: _mtimes(getattr(layout, t)(seg)) for t in files} == files
+    assert {k: stages[k] for k in kept} == kept and stages["dict"]["ok"]
+    assert _index_rows(spark, layout, seg) == want
+
+    before = metrics.latest_stage_id(spark)
+    kept, stages = resume([])
+    assert metrics.latest_stage_id(spark) == before
+    assert stages == kept
 
 
 def _assert_declared_schemas(spark, layout):

@@ -274,7 +274,7 @@ def test_over_budget_recorded_and_unchanged(spark, ms_env, ms_searchers, monkeyp
     assert spark_scan._postings_pin is None and spark_scan._docs_pin is None
     assert set(pinned.pinned_bytes) == {"dict", "blockmax", "docs", "postings"}
     assert not pinned.unpinned
-    docs_ub = X.docs_bytes_ub(spark, IndexLayout(idx))
+    docs_ub = X.docs_bytes_ub(IndexLayout(idx))
     assert pinned._docs_pin.nbytes <= docs_ub
     monkeypatch.setattr(engine, "DRIVER_PIN_BYTES", docs_ub)
     docs_only = Searcher(spark, idx)
@@ -286,6 +286,47 @@ def test_over_budget_recorded_and_unchanged(spark, ms_env, ms_searchers, monkeyp
         assert docs_only.search(q, limit=10, now_ts=PINNED_NOW).collect() == want
         assert docs_only.last_plan["scan"] == "spark"
         assert spark_scan.search(q, limit=10, now_ts=PINNED_NOW).collect() == want
+
+
+def test_docs_bound_recorded_at_write(spark, ms_env, ms_searchers, tmp_path):
+    """The docs pin bound is the sum of what each segment's docs write
+    recorded, read with no Spark job, and equals the aggregate over
+    every segment's docs it replaced; a segment that records none keeps
+    the docs unpinned, with the reason, and the results unchanged."""
+    import json
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from sphinxsearchengine_spark import metrics as M
+
+    idx, _ = ms_env
+    layout = IndexLayout(idx)
+    docs = X._live_union(spark, layout, "docs")
+    n_str = sum(F.coalesce(F.octet_length(c), F.lit(0))
+                for c in ("repo", "path", "commit", "content_sha", "lang"))
+    n_cat = F.coalesce(F.expr(
+        "aggregate(category, 0L, (a, x) -> a + coalesce(octet_length(x), 0) + 4)"
+    ), F.lit(0))
+    n, n_bytes = docs.agg(F.count(F.lit(1)), F.sum(n_str + n_cat)).first()
+    sid = M.latest_stage_id(spark)
+    assert X.docs_bytes_ub(layout) == n * X._DOC_ROW_BYTES + n_bytes
+    assert M.latest_stage_id(spark) == sid
+
+    old = str(tmp_path / "idx")
+    shutil.copytree(idx, old)
+    seg = layout.meta.segments[1]["name"]
+    man_path = IndexLayout(old).manifest(seg)
+    manifest = json.load(open(man_path))
+    del manifest["stages"]["docs"]["pin_bytes_ub"]
+    json.dump(manifest, open(man_path, "w"))
+    searcher = Searcher(spark, old)
+    assert f"segment {seg} records no docs pin bound" in searcher.unpinned["docs"]
+    assert searcher.unpinned["postings"] == "docs not pinned"
+    pinned = ms_searchers[0]
+    for q in ["hotterm engine", '"alpha beta"']:
+        want = pinned.search(q, limit=10, now_ts=PINNED_NOW).collect()
+        assert searcher.search(q, limit=10, now_ts=PINNED_NOW).collect() == want
 
 
 def test_warm_pinned_query_starts_no_stage(spark, ms_searchers):
