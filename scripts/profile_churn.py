@@ -8,9 +8,12 @@ pinned state, ``Searcher.refresh``, ``lifecycle.purge_orphans`` and
 ``lifecycle.compact``.  For each operation it prints the wall time, the
 number of Spark stages it started and the largest task count of any of
 them (``metrics.stage_metrics``), plus the widths the upsert's and the
-compact's segment builds ran (their manifests).  ``local[k]`` and the
-driver heap are sized from this machine's cores and available RAM, as
-the benchmark sizes them.  Usage:
+compact's segment builds ran (their manifests) and what the fresh read
+planned, as the query records it (``_ctx["block_plan"]``): whether its
+blocks were planned, how many, the rarest group's df, where its scan
+and scorer ran, and any planner fallback with its reason.  ``local[k]``
+and the driver heap are sized from this machine's cores and available
+RAM, as the benchmark sizes them.  Usage:
 
     python scripts/profile_churn.py [n_docs] [upsert_docs]
 """
@@ -84,11 +87,12 @@ def main() -> int:
         source = spark.createDataFrame(
             [(d,) for d in sorted(indexed - set(dels))[2:]], "docid long")
 
+        read_ctx: dict = {}
         ops = [
             ("upsert", lambda: L.upsert(spark, idx, batch, cfg)),
             ("delete", lambda: L.delete(spark, idx, dels)),
             ("fresh_read", lambda: search(spark, idx, "zqprofiletok", limit=20,
-                                          now_ts=PINNED_NOW).collect()),
+                                          now_ts=PINNED_NOW, _ctx=read_ctx).collect()),
             ("refresh", searcher.refresh),
             ("purge", lambda: L.purge_orphans(spark, idx, source)),
             ("compact", lambda: L.compact(spark, idx, cfg)),
@@ -109,6 +113,11 @@ def main() -> int:
             if name in ("upsert", "compact"):
                 post = json.load(open(layout.manifest(seg)))["stages"]["postings"]
                 row["widths"] = {k: post.get(k) for k in ("tokenize_tasks", "reduce_tasks")}
+            if name == "fresh_read":
+                plan = read_ctx["block_plan"]
+                row["block_plan"] = {k: plan[k] for k in (
+                    "planned", "n_blocks", "min_df", "scan", "scorer", "fallback")
+                    if k in plan}
             out[name] = row
         print(json.dumps(out, indent=1))
     finally:

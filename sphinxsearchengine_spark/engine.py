@@ -4,9 +4,9 @@ class analog, SphinxSearchEngine_class.php:70-243).
 ``Searcher`` pins per-index state across queries the way searchd keeps
 its index in RAM:
 
-- the term dictionary and the block-max table are collected to the
-  driver once (when under ``dict_cache_rows``), so query expansion and
-  block planning run in driver pandas with no Spark job;
+- the term dictionary and the block-max table, merged across segments,
+  are collected to the driver once (when under ``dict_cache_rows``), so
+  query expansion and block planning read them with no Spark job;
 - the docs columns a result and the scorer read (hydration columns,
   ``lang``, ``date_insert``, ``date_modify``) and the live postings
   (tombstones and newest-segment-wins applied once, in Spark; only the
@@ -40,8 +40,10 @@ The pinned state belongs to one meta generation: lifecycle bumps
 re-pins first when it moved, so a Searcher never serves a stale view.
 
 At 10^12-doc scale the dictionary no longer fits one driver; the same
-class degrades gracefully to bucket-pruned dictionary scans
-(dict_cache_rows=0).
+class degrades gracefully (dict_cache_rows=0): each query then collects
+only its own terms' merged dictionary and blockmax rows, one
+term-pruned Arrow job each, and expansion and block planning run the
+same driver code over them.
 """
 
 from __future__ import annotations
@@ -53,7 +55,7 @@ import pandas as pd
 import pyarrow as pa
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from sphinxsearchengine_spark.index.layout import IndexLayout
 from sphinxsearchengine_spark.query import executor as X
@@ -160,14 +162,7 @@ class Searcher:
 
     def _pin_dict(self) -> None:
         cap = self.dict_cache_rows
-        agg = X._live_union(self.spark, self.layout, "dict").groupBy("term").agg(
-            F.sum("df").alias("df"),
-            F.sum("hits").alias("hits"),
-            F.max("max_tf").alias("max_tf"),
-            F.sum("exact_df").alias("exact_df"),
-            F.sum("exact_hits").alias("exact_hits"),
-            F.first("bucket").alias("bucket"),
-        )
+        agg = X.merged_dict(X._live_union(self.spark, self.layout, "dict"))
         # one job: a table over the cap shows itself by its cap+1'th row
         pdf = agg.limit(cap + 1).toPandas()
         if len(pdf) > cap:
@@ -178,9 +173,10 @@ class Searcher:
 
     def _pin_blockmax(self) -> None:
         """Pin the block-max table too (same searchd-RAM-wordlist analog):
-        warm queries then plan block skipping in driver pandas with zero
-        extra Spark jobs.  Degrades to the distributed planner when the
-        table outgrows the cap or the index has no blockmax table."""
+        warm queries then plan block skipping with zero extra Spark jobs.
+        When the table outgrows the cap, each query's planner collects
+        its own terms' rows instead; an index with no blockmax table is
+        planned unpruned."""
         try:
             bmx = X._live_union(self.spark, self.layout, "blockmax")
         except AnalysisException as e:
@@ -188,7 +184,7 @@ class Searcher:
             self.unpinned["blockmax"] = f"AnalysisException: {str(e).splitlines()[0]}"
             return
         cap = 4 * self.dict_cache_rows
-        agg = bmx.groupBy("term", "blk").agg(*X.blockmax_aggs())
+        agg = X.merged_blockmax(bmx)
         pdf = agg.limit(cap + 1).toPandas()
         if len(pdf) > cap:
             self.unpinned["blockmax"] = f"more than {cap} rows > 4 * dict_cache_rows"

@@ -539,9 +539,11 @@ def build_segment(
             # Per-block max-score metadata (the north rule's block-max
             # WAND substrate): one row per (term, ~128-docid block) with
             # doc count, tf/exact-tf bounds, per-field presence mask and
-            # freshness bound.  The query planner prunes whole blocks
-            # from the postings scan before any positional work
-            # (query/executor._plan_blocks).  Only these pre-aggregated
+            # freshness bound.  The query planner, in the driver, prunes
+            # whole blocks from the postings scan before any positional
+            # work (query/executor._plan_blocks, over these rows merged
+            # across segments, pinned or collected per query).  Only these
+            # pre-aggregated
             # (term, blk) rows shuffle — the docid level never does.
             bmx = per_doc.groupBy("bucket", "term", "blk").agg(
                 F.count(F.lit(1)).alias("n"),

@@ -183,9 +183,10 @@ def ms_searchers(spark, ms_env):
 @pytest.mark.parametrize("q", QUERIES + BLOCKMAX_QUERIES,
                          ids=[str(q) for q in QUERIES + BLOCKMAX_QUERIES])
 def test_pinned_scan_identical(ms_searchers, monkeypatch, q):
-    """The pinned driver scan, the Spark driver collect and the executors
-    return `==` equal results, and the match set is the oracle's over the
-    live docs."""
+    """The pinned driver scan, the Spark driver collect, the executors
+    and module-level `search` with nothing pinned (dictionary and block
+    plan from collected rows) return `==` equal results, and the match
+    set is the oracle's over the live docs."""
     pinned, spark_scan, oracle = ms_searchers
     kw = dict(q)
     query = kw.pop("query")
@@ -195,7 +196,10 @@ def test_pinned_scan_identical(ms_searchers, monkeypatch, q):
     a, plan_a = _run(pinned, monkeypatch, on_driver, query, kw)
     b, plan_b = _run(spark_scan, monkeypatch, on_driver, query, kw)
     c, plan_c = _run(pinned, monkeypatch, lambda plan: False, query, kw)
-    assert a == b == c
+    monkeypatch.setattr(X, "_driver_scorable", on_driver)
+    d = [(r.rank, r.docid, r.score, r.weight_raw) for r in X.search(
+        pinned.spark, pinned.index_dir, query, **kw).collect()]
+    assert a == b == c == d
     if plan_a is not None and plan_a["scorer"] is not None:
         assert [(p["scorer"], p["scan"]) for p in (plan_a, plan_b, plan_c)] == [
             ("driver", "pinned"), ("driver", "spark"), ("executors", "spark")]
@@ -344,30 +348,112 @@ def test_warm_pinned_query_starts_no_stage(spark, ms_searchers):
         assert M.stage_metrics(spark, sid) == [], q
 
 
-def test_block_planners_agree_across_segments(spark, ms_env, ms_searchers):
-    """After upserts into existing blocks, the distributed block planner
-    and the pinned one plan the same blocks with the same caps, and
-    bounds equal to float rounding: both merge a (term, blk) across
-    segments before summing its contribution."""
-    from sphinxsearchengine_spark.query.parser import parse_query
+def _planner_calls(spark, idx, pinned, monkeypatch, q):
+    """The `_plan_blocks` arguments `plan_matches` passes for one test
+    query (none when the query never reaches the planner)."""
+    calls = []
+    real = X._plan_blocks
+
+    def spy(*args, **kw):
+        calls.append(args)
+        return real(*args, **kw)
+
+    kw = dict(q)
+    monkeypatch.setattr(X, "_plan_blocks", spy)
+    X.plan_matches(spark, idx, kw["query"], kw.get("langs"), PINNED_NOW, None,
+                   pinned._ctx(), kw.get("categories"))
+    monkeypatch.setattr(X, "_plan_blocks", real)
+    return calls
+
+
+def _ub_reference(bmx, mapping, now_ts):
+    """Per-block ub by pandas groupby, with a Python OR over ``fmask``:
+    the reference for the planner's sort + reduceat."""
+    import functools
+    import operator
+
+    import pandas as pd
+
+    from sphinxsearchengine_spark.config import BM25_K1
+
+    cols = ["term", "gid", "idf", "is_pm", "midx", "fld", "uex", "pid"]
+    sub = bmx.merge(pd.DataFrame(mapping, columns=cols), on="term")
+    fld = sub["fld"].to_numpy()
+    present = (fld == -1) | ((sub["fmask"].to_numpy() >> np.maximum(fld, 0)) & 1 == 1)
+    sub = sub[present & ((sub["uex"] == 0) | (sub["max_etf"] > 0)).to_numpy()]
+    mtf = np.where(sub["uex"] == 1, sub["max_etf"], sub["max_tf"]).astype(np.float64)
+    sub = sub.assign(contrib=sub["idf"] * mtf / (mtf + BM25_K1))
+    ub = sub.groupby("blk").agg(
+        raw_ub=("contrib", "sum"), dmax=("max_dsum", "max"),
+        fmask=("fmask", lambda s: functools.reduce(operator.or_, s.tolist())))
+    plan = X._finish_block_plan(ub.reset_index().assign(cap=0), now_ts)
+    return plan.set_index("blk")["ub"]
+
+
+def test_block_planners_agree_across_segments(spark, ms_env, ms_searchers, monkeypatch):
+    """After upserts into existing blocks and deletes, a plan from rows
+    collected per query equals the plan from the pinned blockmax frame:
+    the same blocks with the same caps, and bounds equal to float
+    rounding, which are the pandas groupby reference's.  The collect is
+    one job of at most 3 Spark stages, and the dictionary lookup over
+    collected rows equals the pinned one."""
+    from sphinxsearchengine_spark import metrics as M
+    from sphinxsearchengine_spark.query.parser import parse_query, with_categories
 
     idx, _ = ms_env
     pinned = ms_searchers[0]
     layout = IndexLayout(idx)
-    for q in ["hotterm engine", "needleuniq hotterm", '"alpha beta" engine',
-              "index search", 'merge|"alpha beta" engine']:
-        query = parse_query(q)
-        mapping, stats, buckets = X._expand_groups(spark, layout, query,
-                                                   pinned._dict_pdf)
-        args = (spark, layout, mapping, stats, buckets, len(query.groups),
-                X._phrase_alts(query), PINNED_NOW)
-        dist, info = X._plan_blocks(*args)
-        drv, _ = X._plan_blocks(*args, bmx_pdf=pinned._blockmax_pdf)
-        assert "fallback" not in info and len(dist) > 0
-        dist, drv = (p.sort_values("blk").reset_index(drop=True) for p in (dist, drv))
-        assert dist["blk"].tolist() == drv["blk"].tolist(), q
-        assert dist["cap"].tolist() == drv["cap"].tolist(), q
-        np.testing.assert_allclose(dist["ub"], drv["ub"], rtol=1e-12, atol=0)
+    n_planned = 0
+    for q in QUERIES + BLOCKMAX_QUERIES:
+        query = parse_query(q["query"])
+        if q.get("categories"):
+            query = with_categories(query, q["categories"])
+        assert (X._expand_groups(spark, layout, query, None)
+                == X._expand_groups(spark, layout, query, pinned._dict_pdf)), q
+        for args in _planner_calls(spark, idx, pinned, monkeypatch, q):
+            sid = M.latest_stage_id(spark)
+            collected, info = X._plan_blocks(*args)
+            stages = M.stage_metrics(spark, sid)
+            drv, _ = X._plan_blocks(*args, bmx_pdf=pinned._blockmax_pdf)
+            assert "fallback" not in info and info["planned"], q
+            assert 0 < len(stages) <= 3, (q, stages)
+            collected, drv = (p.sort_values("blk").reset_index(drop=True)
+                              for p in (collected, drv))
+            assert collected["blk"].tolist() == drv["blk"].tolist(), q
+            assert collected["cap"].tolist() == drv["cap"].tolist(), q
+            np.testing.assert_allclose(collected["ub"], drv["ub"], rtol=1e-12, atol=0)
+            ref = _ub_reference(pinned._blockmax_pdf, args[2], args[7])
+            np.testing.assert_allclose(ref.loc[drv["blk"]].to_numpy(), drv["ub"],
+                                       rtol=1e-12, atol=0)
+            n_planned += len(drv) > 0
+    assert n_planned >= 10
+
+
+def test_over_bound_collect_plans_unpruned(spark, ms_env, ms_searchers, monkeypatch):
+    """A planner collect whose row bound exceeds BLOCK_PLAN_CAP is not
+    run: the query is planned unpruned, the plan records why, and the
+    rows are the pruned plan's."""
+    from sphinxsearchengine_spark import metrics as M
+
+    idx, _ = ms_env
+    q = "needleuniq hotterm"
+    want_ctx: dict = {}
+    want = X.search(spark, idx, q, limit=10, now_ts=PINNED_NOW, _ctx=want_ctx).collect()
+    info = want_ctx["block_plan"]
+    assert info["planned"] and "fallback" not in info
+    # the rarest group still fits the cap; the two terms' rows do not
+    monkeypatch.setattr(X, "BLOCK_PLAN_CAP", info["min_df"])
+    (args,) = _planner_calls(spark, idx, ms_searchers[0], monkeypatch, dict(query=q))
+    sid = M.latest_stage_id(spark)
+    assert X._plan_blocks(*args)[0] is None
+    assert M.stage_metrics(spark, sid) == []
+    ctx: dict = {}
+    got = X.search(spark, idx, q, limit=10, now_ts=PINNED_NOW, _ctx=ctx).collect()
+    plan = ctx["block_plan"]
+    assert not plan["planned"] and plan["n_blocks"] == 0
+    assert plan["fallback"].startswith("bound ")
+    assert plan["fallback"].endswith(f"blockmax rows > BLOCK_PLAN_CAP {info['min_df']}")
+    assert want and got == want
 
 
 def test_pin_caps_record_unpinned(spark, ms_env):

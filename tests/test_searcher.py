@@ -121,7 +121,7 @@ def test_missing_blockmax_recorded(spark, small_idx):
     ctx = s._ctx()
     a = search(spark, d, "needleuniq hotterm", limit=5, now_ts=PINNED_NOW,
                _ctx=ctx).collect()
-    # the distributed planner cannot read the table either: it falls back
+    # the planner cannot collect from the table either: it falls back
     # to the unpruned scan and records the reason
     assert "fallback" in ctx["block_plan"] and not ctx["block_plan"]["planned"]
     b = search(spark, d, "needleuniq hotterm", limit=5, now_ts=PINNED_NOW,
