@@ -7,12 +7,14 @@ its index in RAM:
 - the term dictionary and the block-max table, merged across segments,
   are collected to the driver once (when under ``dict_cache_rows``), so
   query expansion and block planning read them with no Spark job;
+- the committed tombstones are collected once, as a LocalRelation that
+  the docs pin, the postings pin and every unpinned scan and hydration
+  anti-join with (`executor.live_rows`, the one liveness rule);
 - the docs columns a result and the scorer read (hydration columns,
   ``lang``, ``date_insert``, ``date_modify``) and the live postings
-  (tombstones and newest-segment-wins applied once, in Spark; only the
-  scorer's columns, grouped by term) are collected to the driver when
-  bounds on their bytes, taken before the collects (the postings' from
-  the pinned dictionary), fit ``DRIVER_PIN_BYTES``;
+  (only the scorer's columns, grouped by term) are collected to the
+  driver when bounds on their bytes, taken before the collects (the
+  postings' from the pinned dictionary), fit ``DRIVER_PIN_BYTES``;
 - the resolved postings relation is kept, so a query scanned in Spark
   lists no files and infers no schema before its scan;
 - over the budget, the hydration projection of docs is optionally
@@ -140,6 +142,9 @@ class Searcher:
         self._blockmax_pdf: pd.DataFrame | None = None
         self._docs_pin: pa.Table | None = None
         self._postings_pin: X.PinnedPostings | None = None
+        # one tombstones collect per generation (a `_ctx`), shared by the
+        # pins below and by every call's unpinned scans and hydration
+        self._gen = {"tombstones": X.tombstones(spark, layout)}
         # the resolved postings relation: a query scanned in Spark then
         # lists no files and infers no schema before its scan
         self._postings_df = X._live_union(spark, layout, "postings")
@@ -156,7 +161,7 @@ class Searcher:
             self.unpinned = dict.fromkeys(
                 ("dict", "blockmax", "docs", "postings"), "dict_cache_rows=0")
         if self.cache_docs and self._docs_pin is None:
-            self._docs_cached = X.live_docs(spark, self.index_dir).cache()
+            self._docs_cached = X.live_docs(spark, self.index_dir, self._gen).cache()
             self._docs_cached.count()
         _release_freed_memory()
 
@@ -207,7 +212,7 @@ class Searcher:
             self.unpinned["docs"] = (
                 f"bound {docs_ub} B > DRIVER_PIN_BYTES {DRIVER_PIN_BYTES} B")
         else:
-            self._docs_pin = X.pin_docs(self.spark, self.index_dir)
+            self._docs_pin = X.pin_docs(self.spark, self.index_dir, self._gen)
             self.pinned_bytes["docs"] = self._docs_pin.nbytes
         return docs_ub
 
@@ -226,13 +231,9 @@ class Searcher:
                 f"bound {post_ub} B + docs {docs_ub} B > "
                 f"DRIVER_PIN_BYTES {DRIVER_PIN_BYTES} B")
             return
-        spark = self.spark
-        # the live docs' (docid, seq) as a LocalRelation: the live filter
-        # then costs the scan no extra job
-        live = spark.createDataFrame(self._docs_pin.select(["docid", "seq"]))
         try:
             self._postings_pin = X.PinnedPostings.collect(
-                X.live_postings(spark, self.layout, self._postings_df, live),
+                X.live_rows(self.spark, self.layout, self._postings_df, self._gen),
                 self._dict_pdf["term"].to_numpy(), self._docs_pin)
         except ValueError as e:
             self.unpinned["postings"] = f"ValueError: {e}"
@@ -247,6 +248,7 @@ class Searcher:
         if self.layout.meta.next_seq != self._pinned_seq:
             self.refresh()
         return {
+            **self._gen,
             "dict_pdf": self._dict_pdf,
             "docs_df": self._docs_cached,
             "docs_pin": self._docs_pin,
@@ -274,7 +276,8 @@ class Searcher:
     def facets(self, query: Query | str, **kw) -> DataFrame:
         from sphinxsearchengine_spark.query.facets import category_facet
 
-        return category_facet(self.spark, self.index_dir, query, **kw)
+        return category_facet(self.spark, self.index_dir, query,
+                              _ctx=self._ctx(), **kw)
 
     def suggest(self, raw_query: str, user: str | None = None) -> str | None:
         from sphinxsearchengine_spark.query.suggest import did_you_mean

@@ -55,7 +55,6 @@ from sphinxsearchengine_spark.index.layout import (
     IndexLayout,
     IndexMeta,
     TABLE_SCHEMAS,
-    TOMBSTONE_SCHEMA,
 )
 
 # Document columns fed to the tokenizer, in field order (SURVEY.md §1.5):
@@ -478,6 +477,14 @@ def build_segment(
             .write.mode("overwrite")
             .parquet(layout.docs(seg))
         )
+        # A write's tombstones kill only the copies in OLDER segments, so
+        # a docid repeated in one batch would stay live twice: refuse the
+        # batch before its docs stage is recorded (one aggregate job over
+        # the written docid column).
+        dup = (layout.read(spark, "docs", seg).groupBy("docid").count()
+               .filter(F.col("count") > 1).select("docid").limit(1).collect())
+        if dup:
+            raise ValueError(f"docid {dup[0].docid} is repeated in one write batch")
         mark(docs={"path": layout.docs(seg), "n_docs": int(obs.get["n"]),
                    "pin_bytes_ub": int(obs.get["pin_bytes"] or 0)})
 
@@ -618,7 +625,6 @@ def build_index(
 
     cfg = cfg or EngineConfig()
     fs.makedirs(index_dir)
-    layout = IndexLayout(index_dir)
     seg = "seg_00000"
     stages = build_segment(
         spark, documents, index_dir, seg, cfg, salt_factor, preprocess
@@ -631,10 +637,4 @@ def build_index(
         block_shift=stages["blockmax"]["block_shift"],
     )
     meta.save(index_dir)
-    # empty tombstones (a LocalRelation writes them on one task)
-    from sphinxsearchengine_spark.query.executor import local_frame
-
-    local_frame(spark, [], TOMBSTONE_SCHEMA).write.mode("overwrite").parquet(
-        layout.tombstones()
-    )
     return meta

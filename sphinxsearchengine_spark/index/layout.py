@@ -8,8 +8,9 @@ a directory of immutable parquet *segments* plus a tombstone table:
       segments/<seg>/postings/bucket=<b>/*.parquet
       segments/<seg>/dict/bucket=<b>/*.parquet
       segments/<seg>/docs/*.parquet
-      tombstones/*.parquet          # (docid, asof_seq): docid dead in all
-                                    # segments with seq < asof_seq
+      tombstones/asof_seq=<S>/*.parquet  # docids the write at seq S
+                                    # killed: dead in every segment with
+                                    # seq < S (the one liveness rule)
       manifests/<seg>.json          # per-partition lineage for resume
 
 Postings rows are hash-bucketed by term — a query prunes its scan to the
@@ -49,7 +50,6 @@ POSTINGS_SCHEMA = (
     "pos_vb binary, lang string, date_insert long, date_modify long"
 )
 DICT_COLS = ["bucket", "term", "df", "hits", "max_tf", "exact_df", "exact_hits"]
-TOMBSTONE_SCHEMA = "docid long, asof_seq int"
 
 # sub-table -> declared read schema (bucket-partitioned tables end with
 # the hive partition column)
@@ -69,7 +69,8 @@ TABLE_SCHEMAS = {
         "content string, content_sha string, category array<string>, "
         "category_search string, date_insert long, date_modify long"
     ),
-    "tombstones": TOMBSTONE_SCHEMA,
+    # one directory per write seq: asof_seq is its hive partition column
+    "tombstones": "docid long, asof_seq int",
 }
 
 
@@ -80,7 +81,7 @@ class IndexMeta:
     segments: list = field(default_factory=list)  # ordered [{name, seq, n_docs}]
     field_weights: dict = field(default_factory=lambda: dict(FIELD_WEIGHTS))
     next_seq: int = 0
-    n_tombstones: int = 0  # query fast path skips anti-join when 0
+    n_tombstones: int = 0  # readers skip the tombstones when 0
     # docid -> block id is (docid as uint64) >> block_shift; chosen at
     # first build so a block holds ~POSTINGS_BLOCK docs, constant across
     # all segments of one index (block-max metadata, SURVEY.md §1.5).
@@ -118,8 +119,11 @@ class IndexLayout:
     def docs(self, seg: str) -> str:
         return os.path.join(self.segment_dir(seg), "docs")
 
-    def tombstones(self) -> str:
-        return os.path.join(self.index_dir, "tombstones")
+    def tombstones(self, asof_seq: int | None = None) -> str:
+        """The tombstones table, or the directory of the write at seq
+        ``asof_seq``."""
+        root = os.path.join(self.index_dir, "tombstones")
+        return root if asof_seq is None else os.path.join(root, f"asof_seq={asof_seq}")
 
     def read(self, spark, table: str, seg: str | None = None):
         """One segment's sub-table (a `TABLE_SCHEMAS` key; the index's

@@ -17,11 +17,11 @@ Pipeline per query:
    rows (`merged_blockmax`): pinned, or the mapped terms' rows collected
    in one bucket- and term-pruned Arrow job; then the postings scan:
    bucket-pruned, term-pruned, block-restricted, attribute filter (Q6)
-   pushed into the parquet scan; tombstone anti-join only when
-   tombstones exist (meta fast path).  A `engine.Searcher` whose live
-   postings are pinned in driver RAM reads a driver-scored plan's rows
-   from the pin instead, with the same pre-filters, in numpy
-   (`MatchPlan.pinned_inputs`): no Spark job
+   pushed into the parquet scan; the liveness rule (`live_rows`: one
+   anti-join with the tombstones, none when there are none).  A
+   `engine.Searcher` whose live postings are pinned in driver RAM reads
+   a driver-scored plan's rows from the pin instead, with the same
+   pre-filters, in numpy (`MatchPlan.pinned_inputs`): no Spark job
 5. scoring (`plan_matches` plans steps 2-4 and the scorer; then): a
    plan that fits one scorer task and the driver byte budget is scored
    in the driver, its input read from the pin or collected in one Arrow
@@ -137,7 +137,7 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
 
 def _live_union(spark: SparkSession, layout: IndexLayout, sub: str) -> DataFrame | None:
     """Union one sub-table (postings/dict/docs) across live segments with
-    a seq column; newest-segment-wins and tombstones applied by callers."""
+    a seq column; `live_rows` drops the copies tombstones kill."""
     meta = layout.meta
     dfs = []
     for seg in meta.segments:
@@ -180,66 +180,47 @@ def merged_blockmax(bm: DataFrame) -> DataFrame:
     )
 
 
-def _apply_tombstones(spark, layout: IndexLayout, df: DataFrame) -> DataFrame:
-    ts = layout.read(spark, "tombstones")
-    cond = (df.docid == ts.docid) & (df.seq < ts.asof_seq)
-    return df.join(F.broadcast(ts), cond, "left_anti")
-
-
-def live_postings(spark, layout: IndexLayout, post: DataFrame,
-                  live: DataFrame | None = None) -> DataFrame:
-    """The live rows of a (possibly filtered) postings relation:
-    tombstones out, and newest-segment-wins for updated docs — postings
-    of a docid that appears in a newer segment are dropped (upsert
-    supersedes, SURVEY.md §3.2).  A one-segment index without tombstones
-    passes through unchanged.  ``live``: the live docs' (docid, seq),
-    when the caller holds them as a LocalRelation (the Searcher's docs
-    pin) — one semi-join with it then does both, with no job of its
-    own."""
+def tombstones(spark: SparkSession, layout: IndexLayout,
+               _ctx: dict | None = None) -> DataFrame | None:
+    """The committed tombstones (asof_seq < meta.next_seq: an uncommitted
+    write's are never read) as a LocalRelation, collected in one Arrow
+    job; None when the index has none.  A ``_ctx`` holds them once
+    collected (``_ctx["tombstones"]``), so one call collects them at
+    most once."""
+    if _ctx is not None and "tombstones" in _ctx:
+        return _ctx["tombstones"]
     meta = layout.meta
-    if len(meta.segments) == 1 and not meta.n_tombstones:
-        return post
-    if live is not None:
-        return post.join(F.broadcast(live), ["docid", "seq"], "left_semi")
+    ts = None
     if meta.n_tombstones:
-        post = _apply_tombstones(spark, layout, post)
-    if len(meta.segments) > 1:
-        docs_union = _live_union(spark, layout, "docs")
-        if meta.n_tombstones:
-            docs_union = _apply_tombstones(spark, layout, docs_union)
-        docs_seq = docs_union.groupBy("docid").agg(F.max("seq").alias("mseq"))
-        post = post.join(F.broadcast(docs_seq), "docid", "left").filter(
-            F.col("seq") == F.col("mseq")
-        ).drop("mseq")
-    return post
+        t = (layout.read(spark, "tombstones")
+             .filter(F.col("asof_seq") < meta.next_seq).toArrow())
+        ts = spark.createDataFrame(t)
+    if _ctx is not None:
+        _ctx["tombstones"] = ts
+    return ts
+
+
+def live_rows(spark: SparkSession, layout: IndexLayout, rows: DataFrame,
+              _ctx: dict | None = None) -> DataFrame:
+    """The live rows of a (possibly filtered) `_live_union` relation —
+    the one liveness rule: a tombstone (docid, asof_seq) kills the
+    docid's copy in every segment with seq < asof_seq (SURVEY.md §3.2:
+    an upsert tombstones its docids at its own seq, so it supersedes
+    every older copy).  One broadcast anti-join; an index without
+    tombstones passes through unchanged."""
+    ts = tombstones(spark, layout, _ctx)
+    if ts is None:
+        return rows
+    cond = (rows.docid == ts.docid) & (rows.seq < ts.asof_seq)
+    return rows.join(F.broadcast(ts), cond, "left_anti")
 
 
 def live_docs(spark: SparkSession, index_dir: str,
-              keep_seq: bool = False) -> DataFrame:
-    """Current visible document set (newest segment wins, tombstones out),
-    with the ``seq`` of each doc's segment when ``keep_seq``.
-
-    Fast path: a freshly-built/compacted index (one segment, no
-    tombstones) is a plain parquet scan — no window, no anti-join.
-    """
+              _ctx: dict | None = None) -> DataFrame:
+    """The current visible document set: every segment's docs, less the
+    copies tombstones kill (`live_rows`)."""
     layout = IndexLayout(index_dir)
-    meta = layout.meta
-    if len(meta.segments) == 1 and meta.n_tombstones == 0:
-        seg = meta.segments[0]
-        docs = layout.read(spark, "docs", seg["name"])
-        return docs.withColumn("seq", F.lit(seg["seq"])) if keep_seq else docs
-
-    from pyspark.sql import Window
-
-    docs = _live_union(spark, layout, "docs")
-    if meta.n_tombstones:
-        docs = _apply_tombstones(spark, layout, docs)
-    w = Window.partitionBy("docid").orderBy(F.col("seq").desc())
-    return (
-        docs.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", *([] if keep_seq else ["seq"]))
-    )
+    return live_rows(spark, layout, _live_union(spark, layout, "docs"), _ctx).drop("seq")
 
 
 def _expand_groups(spark, layout, query: Query, dict_pdf=None):
@@ -532,6 +513,8 @@ def _plan_blocks(spark, layout, mapping, stats, buckets,
     (min group df > BLOCK_PLAN_CAP), or, with no pinned frame, the
     collect's row bound is over BLOCK_PLAN_CAP or the blockmax table
     cannot be read; the last two record why in ``info["fallback"]``.
+    A planned ``info`` records where its rows came from:
+    ``info["blockmax"]`` is "pinned" or "collected".
     """
     meta = layout.meta
     shift = meta.block_shift
@@ -546,6 +529,7 @@ def _plan_blocks(spark, layout, mapping, stats, buckets,
     if min_df > BLOCK_PLAN_CAP:
         return None, info
     terms = sorted({m[0] for m in mapping})
+    blockmax = "pinned"
     if bmx_pdf is None:
         bound = sum(min(stats[t][0], 1 << (64 - shift)) for t in terms)
         if bound > BLOCK_PLAN_CAP:
@@ -561,8 +545,8 @@ def _plan_blocks(spark, layout, mapping, stats, buckets,
         bm = bm.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
         bmx_pdf = merged_blockmax(bm).toArrow().sort_by(
             [("term", "ascending"), ("blk", "ascending")]).to_pandas()
-    else:
-        info["driver_ram"] = True
+        blockmax = "collected"
+    info["blockmax"] = blockmax
     # each query term resolves to its row range by binary search — the
     # r5 full-frame isin cost O(blockmax rows) of Python string hashing
     # per query (~0.4 s on the sf1.0 table)
@@ -1010,7 +994,7 @@ class PinnedPostings:
     @classmethod
     def collect(cls, live: DataFrame, terms: np.ndarray,
                 docs: pa.Table) -> "PinnedPostings":
-        """Collect the live postings rows (`live_postings`) in one Arrow
+        """Collect the live postings rows (`live_rows`) in one Arrow
         job and group them by their row in ``terms``, the pinned
         dictionary's sorted term column.  Raises ValueError when a row's
         term or docid is missing from the pinned dictionary or docs."""
@@ -1091,6 +1075,7 @@ class MatchPlan:
     langs: list[str] | None = None
     postings_df: DataFrame | None = None
     pin: PinnedPostings | None = None
+    ctx: dict | None = None
     blocks: np.ndarray | None = None
     blk_plan: pd.DataFrame | None = None
     two_pass: bool = False
@@ -1114,7 +1099,7 @@ class MatchPlan:
                      & F.col("term").isin(self.terms))
         if self.langs:
             p = p.filter(F.col("lang").isin(self.langs))  # Q6 pushdown
-        p = live_postings(self.spark, self.layout, p)
+        p = live_rows(self.spark, self.layout, p, self.ctx)
         if self.fields is not None:
             p = p.filter(F.col("field").isin(self.fields))
         if self.tf_terms is not None:
@@ -1287,7 +1272,7 @@ def plan_matches(
         max_score_val = ranker.max_score(base_n, n_categories=len(categories))
 
     meta = layout.meta
-    ctx = _ctx or {}
+    ctx = {} if _ctx is None else _ctx
     mapping, _stats, buckets = _expand_groups(spark, layout, query,
                                               ctx.get("dict_pdf"))
     if not mapping:
@@ -1319,7 +1304,7 @@ def plan_matches(
     # where its input came from: "pinned", "spark" or None)
     info = {"planned": False, "n_blocks": 0, "min_df": None, "passes": 1,
             "tau": None, "est_rows": scan_rows, "scorer_tasks": 0,
-            "scorer": None, "scan": None,
+            "scorer": None, "scan": None, "blockmax": None,
             "input_bytes_ub": _input_bytes_ub(mapping, _stats)}
     if _ctx is not None:
         _ctx["block_plan"] = info
@@ -1329,7 +1314,7 @@ def plan_matches(
         fields=None if -1 in flds else sorted(flds),
         tf_terms=None if len(tf_terms) == len(terms) else tf_terms,
         langs=langs or None, postings_df=ctx.get("postings_df"),
-        pin=ctx.get("postings_pin"),
+        pin=ctx.get("postings_pin"), ctx=ctx,
     )
 
     # --- block-max pruning (north rule: block-max WAND) -------------------
@@ -1526,14 +1511,14 @@ def _top_rows(scored: DataFrame, col: str, desc: bool, n: int) -> pd.DataFrame:
     )
 
 
-# the pinned docs columns (`pin_docs`): a result's, the per-doc
-# attributes the scorer reads, and the seq of the doc's live segment
-_PIN_DOC_COLS = ["docid", *_DOC_COLS, "lang", "date_insert", "date_modify", "seq"]
+# the pinned docs columns (`pin_docs`): a result's and the per-doc
+# attributes the scorer reads
+_PIN_DOC_COLS = ["docid", *_DOC_COLS, "lang", "date_insert", "date_modify"]
 # Arrow bytes of one pinned docs row besides its strings: three 8-byte
-# columns (docid, date_insert, date_modify), the 4-byte seq, the 4-byte
-# offsets of six string or list columns, and a validity bit per column
-# (2 bytes).  A category element adds a 4-byte offset to its string.
-_DOC_ROW_BYTES = 54
+# columns (docid, date_insert, date_modify), the 4-byte offsets of six
+# string or list columns, and a validity bit per column (2 bytes).  A
+# category element adds a 4-byte offset to its string.
+_DOC_ROW_BYTES = 50
 
 
 def doc_pin_bytes():
@@ -1565,10 +1550,11 @@ def docs_bytes_ub(layout: IndexLayout) -> int:
     return total
 
 
-def pin_docs(spark: SparkSession, index_dir: str) -> pa.Table:
+def pin_docs(spark: SparkSession, index_dir: str,
+             _ctx: dict | None = None) -> pa.Table:
     """The live docs' `_PIN_DOC_COLS`, collected in one Arrow job and
     sorted by docid, one chunk per column."""
-    t = live_docs(spark, index_dir, keep_seq=True).select(*_PIN_DOC_COLS).toArrow()
+    t = live_docs(spark, index_dir, _ctx).select(*_PIN_DOC_COLS).toArrow()
     return t.take(pc.sort_indices(t["docid"])).combine_chunks()
 
 
@@ -1578,7 +1564,7 @@ def hydration_frame(spark: SparkSession, index_dir: str, docids: list[int],
     against the pinned docs, or `live_docs`."""
     docs = _ctx.get("docs_df") if _ctx else None
     if docs is None:
-        docs = live_docs(spark, index_dir)
+        docs = live_docs(spark, index_dir, _ctx)
     return docs.select("docid", *_DOC_COLS).filter(F.col("docid").isin(docids))
 
 
@@ -1635,6 +1621,8 @@ def search(
     limit is capped at MATCH_CAP (the reference's limit=1000, :169).
     """
     limit = min(limit, MATCH_CAP)
+    # the scan and hydration share one tombstones collect
+    _ctx = {} if _ctx is None else _ctx
     col = _ORDER_COLS.get(order_by, "weight_raw")
     desc = sort == "desc"
     if _scored is not None:
@@ -1669,6 +1657,7 @@ def search_with_meta(spark, index_dir, query, _ctx=None, **kw):
     if isinstance(query, str):
         query = parse_query(query)
     layout = IndexLayout(index_dir)
+    _ctx = {} if _ctx is None else _ctx  # one tombstones collect
     meta: dict = {"total": 0, "keywords": [], "time": 0.0}
     if query.blank or not query.groups:
         return search(spark, index_dir, query, _ctx=_ctx, **kw), meta

@@ -22,15 +22,17 @@ def category_facet(
     langs: list[str] | None = None,
     now_ts: int = 0,
     cap: int = FACET_CAP,
+    _ctx: dict | None = None,
 ) -> DataFrame:
     """(category, n_docs) over the match set, sorted by category
     (the reference ksorts the deduped list)."""
     from sphinxsearchengine_spark.query.executor import live_docs, score_matches
 
+    _ctx = {} if _ctx is None else _ctx  # one tombstones collect
     matched = score_matches(
-        spark, index_dir, query, langs, now_ts, match_only=True
+        spark, index_dir, query, langs, now_ts, _ctx=_ctx, match_only=True
     ).select("docid")
-    docs = live_docs(spark, index_dir).select("docid", "category")
+    docs = live_docs(spark, index_dir, _ctx).select("docid", "category")
     return (
         docs.join(matched, "docid", "left_semi")
         .select(F.explode("category").alias("category"))

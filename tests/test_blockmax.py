@@ -108,7 +108,7 @@ def test_searcher_pinned_pandas_planner(spark, bm_env):
         "sphinxsearchengine_spark.query.executor", fromlist=["search"]
     ).search(spark, idx, "needleuniq hotterm", limit=5, now_ts=PINNED_NOW, _ctx=ctx)
     got = res.collect()
-    assert ctx["block_plan"]["driver_ram"]
+    assert ctx["block_plan"]["blockmax"] == "pinned"
     assert ctx["block_plan"]["n_blocks"] <= 4
     want = oracle.search("needleuniq hotterm", limit=5, now_ts=PINNED_NOW)
     assert [r.docid for r in got] == [w["docid"] for w in want]

@@ -222,8 +222,9 @@ def _assert_declared_schemas(spark, layout):
             inferred = spark.read.parquet(path).schema
             assert inferred == StructType.fromDDL(TABLE_SCHEMAS[table]), (
                 seg["name"], table)
-    inferred = spark.read.parquet(layout.tombstones()).schema
-    assert inferred == StructType.fromDDL(TABLE_SCHEMAS["tombstones"])
+    if layout.meta.n_tombstones:  # a build or a compact leaves none
+        inferred = spark.read.parquet(layout.tombstones()).schema
+        assert inferred == StructType.fromDDL(TABLE_SCHEMAS["tombstones"])
 
 
 def test_small_delta_widths_and_declared_schemas(spark, tmp_path):
@@ -271,3 +272,185 @@ def test_small_delta_widths_and_declared_schemas(spark, tmp_path):
     _assert_declared_schemas(spark, layout)
     assert _match_set(spark, idx, "widthtoken") == {
         r.docid for r in batch.select("docid").collect()}
+
+
+# --- the crash contract: an uncommitted write never leaks -----------------
+
+CRASH_N = 200
+
+
+@pytest.fixture(scope="module")
+def crash_base(spark, tmp_path_factory):
+    """A built 200-doc index (copied per test) and its documents."""
+    idx = str(tmp_path_factory.mktemp("crash") / "idx")
+    pdf = derive_documents(generate_corpus(spark, CRASH_N, partitions=2)).toPandas()
+    pdf = pdf.sort_values("docid").reset_index(drop=True)
+    docs = spark.createDataFrame(pdf)
+    build_index(spark, docs, idx, CFG, salt_factor=2)
+    return idx, docs
+
+
+def _copy_index(src, tmp_path):
+    import shutil
+
+    dst = str(tmp_path / "idx")
+    shutil.copytree(src, dst)
+    return dst
+
+
+def _retoken(docs, ids, token):
+    """The docs of ``ids`` with ``token`` appended to their content."""
+    content = F.concat_ws(" ", "content", F.lit(token))
+    return (docs.filter(F.col("docid").isin(ids))
+            .withColumn("content", content)
+            .withColumn("content_sha", F.sha2(content, 256)))
+
+
+def _crashed_upsert(spark, idx, batch, monkeypatch):
+    """An upsert that dies at its commit (meta.json save)."""
+    from sphinxsearchengine_spark.index.layout import IndexMeta
+
+    def boom(self, index_dir):
+        raise RuntimeError("crash before commit")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(IndexMeta, "save", boom)
+        with pytest.raises(RuntimeError, match="crash before commit"):
+            upsert(spark, idx, batch, CFG)
+
+
+def _n_live(spark, idx):
+    from sphinxsearchengine_spark.query.executor import live_docs
+
+    return live_docs(spark, idx).count()
+
+
+def test_crashed_upsert_tombstones_stay_invisible(spark, crash_base, tmp_path,
+                                                   monkeypatch):
+    """A crashed upsert's tombstones never apply: neither does it kill
+    its docids, nor does the next write's commit make them visible."""
+    base, docs = crash_base
+    idx = _copy_index(base, tmp_path)
+    ids = sorted(r.docid for r in docs.select("docid").collect())
+    _crashed_upsert(spark, idx, _retoken(docs, ids[:10], "crashtoken"), monkeypatch)
+    assert IndexLayout(idx).meta.n_docs == CRASH_N
+    assert _n_live(spark, idx) == CRASH_N
+    meta = delete(spark, idx, [ids[-1]])
+    assert meta.n_docs == CRASH_N - 1
+    assert _n_live(spark, idx) == CRASH_N - 1
+    assert _match_set(spark, idx, "crashtoken") == set()
+
+
+def test_write_after_crash_does_not_resume_it(spark, crash_base, tmp_path,
+                                             monkeypatch):
+    """An upsert at the seq a crashed upsert used builds its own segment:
+    it neither resumes the crashed segment's manifest nor inherits its
+    tombstones."""
+    base, docs = crash_base
+    idx = _copy_index(base, tmp_path)
+    ids = sorted(r.docid for r in docs.select("docid").collect())
+    _crashed_upsert(spark, idx, _retoken(docs, ids[:10], "crashatoken"), monkeypatch)
+    meta = upsert(spark, idx, _retoken(docs, ids[10:20], "crashbtoken"), CFG)
+    assert meta.n_docs == CRASH_N
+    assert _n_live(spark, idx) == CRASH_N
+    assert _match_set(spark, idx, "crashbtoken") == set(ids[10:20])
+    assert _match_set(spark, idx, "crashatoken") == set()
+
+
+def test_repeated_docid_in_batch_refused(spark, crash_base, tmp_path):
+    """A write batch that repeats a docid raises ValueError naming it and
+    commits nothing, through upsert and through build_index."""
+    from sphinxsearchengine_spark.query.executor import live_docs
+
+    base, docs = crash_base
+    idx = _copy_index(base, tmp_path)
+    ids = sorted(r.docid for r in docs.select("docid").collect())
+    batch = _retoken(docs, ids[:3], "duptoken").unionByName(
+        _retoken(docs, ids[1:2], "dupother"))
+    before = IndexLayout(idx).meta
+    with pytest.raises(ValueError, match=f"docid {ids[1]} is repeated"):
+        upsert(spark, idx, batch, CFG)
+    assert IndexLayout(idx).meta == before
+    assert live_docs(spark, idx).count() == CRASH_N
+    # the refused batch leaves nothing the next write picks up
+    meta = upsert(spark, idx, _retoken(docs, ids[:3], "duptoken"), CFG)
+    assert meta.n_docs == CRASH_N and _n_live(spark, idx) == CRASH_N
+    assert _match_set(spark, idx, "duptoken") == set(ids[:3])
+    assert _match_set(spark, idx, "dupother") == set()
+
+    fresh = str(tmp_path / "fresh")
+    with pytest.raises(ValueError, match=f"docid {ids[1]} is repeated"):
+        build_index(spark, batch, fresh, CFG, salt_factor=2)
+    assert not IndexLayout(fresh).exists()
+
+
+# --- property: tombstones alone decide liveness ----------------------------
+
+def _check_liveness(spark, idx, model, searcher):
+    """live_docs equals the last-write-wins model, the live postings hold
+    exactly its docids, meta counts them, and a Searcher's docs pin
+    equals live_docs."""
+    from sphinxsearchengine_spark.query import executor as X
+
+    layout = IndexLayout(idx)
+    rows = X.live_docs(spark, idx).select("docid", "content_sha").collect()
+    got = {r.docid: r.content_sha for r in rows}
+    assert len(rows) == len(got) and got == model
+    post = X.live_rows(spark, layout, X._live_union(spark, layout, "postings"))
+    assert {r.docid for r in post.select("docid").distinct().collect()} == set(model)
+    assert layout.meta.n_docs == len(model)
+    searcher._ctx()  # re-pins the new generation
+    pin = searcher._docs_pin
+    assert dict(zip(pin["docid"].to_pylist(), pin["content_sha"].to_pylist())) == got
+
+
+@pytest.mark.parametrize("seed", [3, 7])
+def test_liveness_property(spark, tmp_path, seed):
+    """Seeded random upserts (replacing, new and re-upserted deleted
+    docids), deletes and compactions keep every reader's live view equal
+    to a last-write-wins model."""
+    import hashlib
+    import random
+
+    from sphinxsearchengine_spark.engine import Searcher
+
+    rng = random.Random(seed)
+    pool = derive_documents(generate_corpus(spark, 60, partitions=2)).toPandas()
+    pool = pool.sort_values("docid").reset_index(drop=True)
+    schema = spark.createDataFrame(pool.iloc[:1]).schema
+    all_ids = pool["docid"].tolist()
+    idx = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(pool.iloc[:40], schema), idx, CFG,
+                salt_factor=2)
+    model = dict(zip(pool["docid"][:40], pool["content_sha"][:40]))
+    deleted: set[int] = set()
+    searcher = Searcher(spark, idx)
+    _check_liveness(spark, idx, model, searcher)
+
+    # every kind of step at least once, in a seeded order; the last
+    # upsert re-upserts a deleted docid
+    steps = ["delete"] + rng.sample(["upsert", "upsert", "delete", "compact"], 4)
+    for i, op in enumerate(steps + ["upsert"]):
+        live = sorted(model)
+        if op == "delete":
+            # live docids, and one the index never held
+            gone = rng.sample(live, rng.randint(1, 3)) + [12345 + i]
+            delete(spark, idx, gone)
+            for d in gone:
+                if model.pop(d, None) is not None:
+                    deleted.add(d)
+        elif op == "compact":
+            compact(spark, idx, CFG)
+        else:
+            new = [d for d in all_ids if d not in model and d not in deleted]
+            ids = rng.sample(live, rng.randint(1, 3)) + rng.sample(new, rng.randint(0, 2))
+            k = 1 if i == len(steps) else rng.randint(0, 1)
+            ids += rng.sample(sorted(deleted), min(k, len(deleted)))
+            rows = pool[pool["docid"].isin(ids)].copy()
+            rows["content"] = rows["content"] + f" propv{i}"
+            rows["content_sha"] = [hashlib.sha256(c.encode()).hexdigest()
+                                   for c in rows["content"]]
+            upsert(spark, idx, spark.createDataFrame(rows, schema), CFG)
+            model.update(zip(rows["docid"], rows["content_sha"]))
+            deleted -= set(ids)
+        _check_liveness(spark, idx, model, searcher)

@@ -253,7 +253,7 @@ def test_pinned_rows_equal_live_postings(spark, ms_env, ms_searchers):
     pin = ms_searchers[0]._postings_pin
     layout = IndexLayout(idx)
     cols = ["term", "docid", "field", "tf", "exact_tf", "pos_vb"]
-    want = X.live_postings(spark, layout, X._live_union(spark, layout, "postings"))
+    want = X.live_rows(spark, layout, X._live_union(spark, layout, "postings"))
     want = want.select(*cols).toPandas()
     got = pd.DataFrame({
         "term": np.repeat(pin.terms, np.diff(pin.starts)),
