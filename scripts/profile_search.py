@@ -3,14 +3,15 @@
 
 Prints what the Searcher pinned (``pinned_bytes``: driver bytes per
 table) and what it did not, and why (``unpinned``).  Then, for each
-query, runs ``Searcher.search(...).collect()`` n times and prints the
+query, runs each of ``Searcher.search``, ``Searcher.search_with_meta``
+and ``Searcher.facets`` (collected) n times and prints, per call, the
 best wall time, the Spark stages the last run started
-(``metrics.stage_metrics``) and the plan the query recorded
+(``metrics.stage_metrics``), where the plan was scored (``scorer``:
+driver or executors) and where its input came from (``scan``: pinned or
+spark); for ``search`` also the plan the query recorded
 (``Searcher.last_plan``: blocks kept, τ passes, estimated scorer rows,
-scorer tasks, where the plan was scored — ``scorer``: driver or
-executors — and where its input came from — ``scan``: pinned or
-spark).  ``local[k]`` and the driver heap are sized from this machine's
-cores and available RAM.  Usage:
+scorer tasks).  ``local[k]`` and the driver heap are sized from this
+machine's cores and available RAM.  Usage:
 
     python scripts/profile_search.py INDEX_DIR [n_repeats]
 """
@@ -65,20 +66,30 @@ def main() -> int:
     searcher.search("index", limit=20, now_ts=PINNED_NOW).collect()
     out = {"local": size["k"], "pinned_bytes": searcher.pinned_bytes,
            "unpinned": searcher.unpinned}
+    calls = {
+        "search": lambda q: searcher.search(q, limit=20, now_ts=PINNED_NOW).collect(),
+        "meta": lambda q: searcher.search_with_meta(
+            q, limit=20, now_ts=PINNED_NOW)[0].collect(),
+        "facets": lambda q: searcher.facets(q, now_ts=PINNED_NOW).collect(),
+    }
     for name, q in QUERIES.items():
-        walls = []
-        for _ in range(n):
-            sid = M.latest_stage_id(spark)
-            t0 = time.perf_counter()
-            searcher.search(q, limit=20, now_ts=PINNED_NOW).collect()
-            walls.append(time.perf_counter() - t0)
-        stages = M.stage_metrics(spark, sid)
-        out[name] = {
-            "best_s": round(min(walls), 3),
-            "spark_stages": len(stages),
-            "scan": searcher.last_plan["scan"] if searcher.last_plan else None,
-            "plan": searcher.last_plan,
-        }
+        out[name] = {}
+        for call, run in calls.items():
+            walls = []
+            for _ in range(n):
+                sid = M.latest_stage_id(spark)
+                t0 = time.perf_counter()
+                run(q)
+                walls.append(time.perf_counter() - t0)
+            plan = searcher.last_plan or {}
+            out[name][call] = {
+                "best_s": round(min(walls), 3),
+                "spark_stages": len(M.stage_metrics(spark, sid)),
+                "scorer": plan.get("scorer"),
+                "scan": plan.get("scan"),
+            }
+            if call == "search":
+                out[name][call]["plan"] = searcher.last_plan
     print(json.dumps(out, indent=1, default=str))
     spark.stop()
     return 0

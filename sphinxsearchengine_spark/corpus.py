@@ -59,65 +59,18 @@ LANGS = ["python", "php", "rust", "go", "java"]
 
 CORPUS_SCHEMA = "repo string, path string, commit string, lang string, content string"
 
-
-def _doc_content_ref(rng: np.random.RandomState, i: int) -> str:
-    n = 40 + int(rng.randint(0, 160))
-    words = []
-    for _ in range(n):
-        r = rng.randint(0, 100)
-        if r < 55:
-            words.append(EN_WORDS[rng.randint(0, len(EN_WORDS))])
-        elif r < 70:
-            words.append(RU_WORDS[rng.randint(0, len(RU_WORDS))])
-        elif r < 85:
-            blend = BLENDS[rng.randint(0, len(BLENDS))]
-            words.append(
-                IDENT_HEADS[rng.randint(0, len(IDENT_HEADS))]
-                + blend
-                + IDENT_TAILS[rng.randint(0, len(IDENT_TAILS))]
-            )
-        elif r < 92:
-            words.append("xyzq"[rng.randint(0, 4)])  # 1-char droppables
-        else:
-            words.append(str(rng.randint(0, 9999)))
-    if i == 0:
-        words.insert(int(rng.randint(0, len(words))), "needleuniq")
-    if rng.randint(0, 2) == 0:
-        words.insert(int(rng.randint(0, len(words))), "hotterm")
-    if rng.randint(0, 4) == 0:
-        k = int(rng.randint(0, len(words)))
-        words[k:k] = ["alpha", "beta"]
-    return " ".join(words)
-
-
-def _gen_batch_ref(pdf_iter):
-    """Reference-semantics generator twin (per-draw scalar RandomState
-    calls).  Kept ONLY as the equality oracle for
-    tests/test_corpus_fast.py — the vectorized production path below
-    must emit byte-identical rows."""
-    for pdf in pdf_iter:
-        rows = []
-        for i in pdf["id"].to_numpy():
-            rng = np.random.RandomState(SEED + int(i))
-            repo = f"org{i % 7}/repo{i % 50}"
-            lang = LANGS[int(i) % len(LANGS)]
-            path = f"src/mod{i % 13}/file_{i}.{lang[:2]}"
-            commit = "".join("0123456789abcdef"[b % 16] for b in rng.randint(0, 256, 40))
-            rows.append((repo, path, commit, lang, _doc_content_ref(rng, int(i))))
-        yield pd.DataFrame(rows, columns=["repo", "path", "commit", "lang", "content"])
-
-
 # ---------------------------------------------------------------------------
 # Vectorized generator (r6).  numpy's legacy RandomState consumes the
 # MT19937 stream for every bounded randint as masked 32-bit rejection
 # sampling — one raw word per attempt, identical for scalar and array
 # draws (verified against RandomState for the bounds used here;
-# tests/test_corpus_fast.py asserts full-row byte equality with the
-# reference twin above).  So each doc's whole draw sequence can be
-# replayed from ONE bulk raw-word call, and the per-word draw machine
-# runs vectorized ACROSS the docs of a batch: corpus generation drops
-# from ~210 scalar randint calls per doc (~11.5 s of the sf1.0 build's
-# docs stage) to a few numpy passes per word position.
+# tests/test_corpus_fast.py asserts full-row byte equality with a
+# reference twin of per-draw scalar RandomState calls).  So each doc's
+# whole draw sequence can be replayed from ONE bulk raw-word call, and
+# the per-word draw machine runs vectorized ACROSS the docs of a batch:
+# corpus generation drops from ~210 scalar randint calls per doc
+# (~11.5 s of the sf1.0 build's docs stage) to a few numpy passes per
+# word position.
 
 _HEXMAP = np.frombuffer(b"0123456789abcdef", dtype=np.uint8)
 
@@ -236,7 +189,8 @@ _BLEND_ARR = np.asarray(list(BLENDS), dtype=object)
 
 def _gen_rows_fast(ids: np.ndarray):
     """(repo, path, commit, lang, content) rows for `ids` — byte-equal
-    to the reference twin, vectorized across the batch."""
+    to the reference twin in tests/test_corpus_fast.py, vectorized
+    across the batch."""
     m = len(ids)
     d = _VecDraws(ids)
     all_rows = np.arange(m, dtype=np.int64)

@@ -24,11 +24,13 @@ A warm ``search(...).collect()`` of a plan that fits one scorer task
 then starts no Spark job: its scorer input is read from the pinned
 postings (`executor.MatchPlan.pinned_inputs`), scored in the driver,
 ranked, and hydrated from the pinned docs; the result is a
-LocalRelation.  Without the postings pin the same plan is collected in
-one Arrow job and scored in the driver, and hydration is one
-``docid IN (top-k)`` lookup when the docs are not pinned.  A larger plan
-is scored on executors (docid exchange sized from the plan's row
-estimate, Arrow scorer) and only its top rows are collected.  The
+LocalRelation; ``search_with_meta`` and ``facets`` place their plans by
+the same rule (`executor.scored_rows`), so theirs start none either.
+Without the postings pin the same plan is collected in one Arrow job
+and scored in the driver, and hydration is one ``docid IN (top-k)``
+lookup when the docs are not pinned.  A larger plan is scored on
+executors (docid exchange sized from the plan's row estimate, Arrow
+scorer) and only its top rows are collected.  The
 driver-side frames a Spark plan broadcasts are LocalRelations, so they
 add no jobs; the two-pass τ refinement adds a pass-A job only when the
 plan needs more than one scorer task.  ``Searcher.last_plan`` records
@@ -61,6 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sphinxsearchengine_spark.index.layout import IndexLayout
 from sphinxsearchengine_spark.query import executor as X
+from sphinxsearchengine_spark.query.facets import category_facet
 from sphinxsearchengine_spark.query.parser import Query, parse_query
 
 
@@ -161,7 +164,8 @@ class Searcher:
             self.unpinned = dict.fromkeys(
                 ("dict", "blockmax", "docs", "postings"), "dict_cache_rows=0")
         if self.cache_docs and self._docs_pin is None:
-            self._docs_cached = X.live_docs(spark, self.index_dir, self._gen).cache()
+            docs = X.live_docs(spark, self.index_dir, self._gen)
+            self._docs_cached = docs.select("docid", *X._DOC_COLS).cache()
             self._docs_cached.count()
         _release_freed_memory()
 
@@ -274,10 +278,7 @@ class Searcher:
         return self._run(X.score_matches, query, **kw)
 
     def facets(self, query: Query | str, **kw) -> DataFrame:
-        from sphinxsearchengine_spark.query.facets import category_facet
-
-        return category_facet(self.spark, self.index_dir, query,
-                              _ctx=self._ctx(), **kw)
+        return self._run(category_facet, query, **kw)
 
     def suggest(self, raw_query: str, user: str | None = None) -> str | None:
         from sphinxsearchengine_spark.query.suggest import did_you_mean

@@ -417,6 +417,17 @@ def _manifest_save(path: str, manifest: dict) -> None:
     fs.write_json_atomic(path, manifest)
 
 
+def _refuse_repeated_docids(spark: SparkSession, layout: IndexLayout, seg: str) -> None:
+    """Raise ValueError when segment ``seg``'s written docs repeat a
+    docid (one aggregate job over the docid column).  A write's
+    tombstones kill only the copies in OLDER segments, so a docid
+    repeated in one batch would stay live twice."""
+    dup = (layout.read(spark, "docs", seg).groupBy("docid").count()
+           .filter(F.col("count") > 1).select("docid").limit(1).collect())
+    if dup:
+        raise ValueError(f"docid {dup[0].docid} is repeated in one write batch")
+
+
 def build_segment(
     spark: SparkSession,
     documents: DataFrame,
@@ -426,8 +437,14 @@ def build_segment(
     salt_factor: int = 4,
     preprocess=None,
     block_shift: int | None = None,
+    distinct_docids: bool = False,
 ) -> dict:
     """Tokenize + write one immutable segment; resumable per stage.
+
+    A batch that repeats a docid is refused before its docs stage is
+    recorded (`_refuse_repeated_docids`), unless the caller passes
+    ``distinct_docids=True`` because its documents hold each docid once
+    by construction (compact's input is `live_docs`).
 
     ``preprocess``: optional Column-expression hook ``f(content_col) ->
     Column`` applied to the text field before indexing — the analog of
@@ -477,14 +494,8 @@ def build_segment(
             .write.mode("overwrite")
             .parquet(layout.docs(seg))
         )
-        # A write's tombstones kill only the copies in OLDER segments, so
-        # a docid repeated in one batch would stay live twice: refuse the
-        # batch before its docs stage is recorded (one aggregate job over
-        # the written docid column).
-        dup = (layout.read(spark, "docs", seg).groupBy("docid").count()
-               .filter(F.col("count") > 1).select("docid").limit(1).collect())
-        if dup:
-            raise ValueError(f"docid {dup[0].docid} is repeated in one write batch")
+        if not distinct_docids:
+            _refuse_repeated_docids(spark, layout, seg)
         mark(docs={"path": layout.docs(seg), "n_docs": int(obs.get["n"]),
                    "pin_bytes_ub": int(obs.get["pin_bytes"] or 0)})
 

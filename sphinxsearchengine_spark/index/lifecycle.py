@@ -195,9 +195,10 @@ def compact(
     seq = old_meta.next_seq
     seg = _segment_name(seq)
     _clear_seq(layout, seq)
+    # live_docs holds each docid once: no repeated-docid job
     stages = build_segment(
         spark, live_docs(spark, index_dir), index_dir, seg, cfg,
-        block_shift=old_meta.block_shift,
+        block_shift=old_meta.block_shift, distinct_docids=True,
     )
     n_docs = stages["docs"]["n_docs"]
     meta = IndexMeta(

@@ -22,11 +22,11 @@ Pipeline per query:
    `engine.Searcher` whose live postings are pinned in driver RAM reads
    a driver-scored plan's rows from the pin instead, with the same
    pre-filters, in numpy (`MatchPlan.pinned_inputs`): no Spark job
-5. scoring (`plan_matches` plans steps 2-4 and the scorer; then): a
-   plan that fits one scorer task and the driver byte budget is scored
-   in the driver, its input read from the pin or collected in one Arrow
-   job with no exchange; any other plan takes ONE shuffle — repartition
-   by docid → mapInPandas.  Both run the same scorer, fully
+5. scoring (`plan_matches` plans steps 2-4 and the scorer; `scored_rows`
+   places it): a plan that fits one scorer task and the driver byte
+   budget is scored in the driver, its input read from the pin or
+   collected in one Arrow job with no exchange; any other plan takes ONE
+   shuffle — repartition by docid → mapInPandas.  Both run the same scorer, fully
    numpy-vectorized: batch varbyte decode of ALL position lists in one
    pass, phrase adjacency via sorted-code intersections, LCS chain DP as
    n_groups vectorized rounds; no per-document Python loop
@@ -45,6 +45,7 @@ or on executors.
 from __future__ import annotations
 
 import mmap
+import time
 from dataclasses import dataclass
 from functools import cached_property
 from typing import Callable
@@ -1275,6 +1276,7 @@ def plan_matches(
     ctx = {} if _ctx is None else _ctx
     mapping, _stats, buckets = _expand_groups(spark, layout, query,
                                               ctx.get("dict_pdf"))
+    ctx["keyword_stats"] = _stats  # SHOW META's, even when nothing matches
     if not mapping:
         return None
     # not every group found in dict → AND can never be satisfied
@@ -1306,8 +1308,7 @@ def plan_matches(
             "tau": None, "est_rows": scan_rows, "scorer_tasks": 0,
             "scorer": None, "scan": None, "blockmax": None,
             "input_bytes_ub": _input_bytes_ub(mapping, _stats)}
-    if _ctx is not None:
-        _ctx["block_plan"] = info
+    ctx["block_plan"] = info
     plan = MatchPlan(
         info, scorer, spark, layout, mapping, terms, buckets,
         meta.block_shift, scan_rows,
@@ -1434,10 +1435,11 @@ def score_matches(
 ) -> DataFrame:
     """Match + score all documents for `query`; returns the scored set
     (docid, weight_raw, score, …) BEFORE ordering/limit, as a lazy
-    executor-scored frame (`plan_matches`, then `_score_on_executors`).
+    executor-scored frame whatever the plan's size (`plan_matches`, then
+    `_score_on_executors`; `scored_rows` places a plan by its size).
 
-    ``match_only`` (facet path) keeps exact AND/phrase matching but
-    skips all scoring work; score columns come back zero.
+    ``match_only`` keeps exact AND/phrase matching but skips all scoring
+    work; score columns come back zero.
 
     ``categories`` appends the reference's '@category_search "__a__"|…'
     filter group and widens maxScore by the category weight per selected
@@ -1445,12 +1447,8 @@ def score_matches(
     plan = plan_matches(spark, index_dir, query, langs, now_ts, prune, _ctx,
                         categories, match_only)
     if plan is None:
-        return _no_matches(spark)
+        return local_frame(spark, [], SCORED_SCHEMA)
     return _score_on_executors(spark, plan, prune)
-
-
-def _no_matches(spark: SparkSession) -> DataFrame:
-    return local_frame(spark, [], SCORED_SCHEMA)
 
 
 # Byte budget of a driver-scored plan: its scorer input, bounded by
@@ -1478,10 +1476,15 @@ def _driver_scorable(plan: MatchPlan) -> bool:
     )
 
 
-def _score_in_driver(plan: MatchPlan) -> pd.DataFrame | None:
-    """Run the same `score_partition` in-process on a plan's scorer
-    input: read from the pinned postings with no Spark job, or else
-    collected in one Arrow job (no docid exchange)."""
+def scored_rows(plan: MatchPlan | None, prune: dict | None):
+    """A plan's scored rows, placed by the one rule (`_driver_scorable`):
+    the lazy executor-scored frame, or (None: nothing to score) a pandas
+    frame from the same `score_partition` run in-process on its input,
+    read from the pin or collected in one Arrow job (no docid exchange)."""
+    if plan is None:
+        return None
+    if not _driver_scorable(plan):
+        return _score_on_executors(plan.spark, plan, prune)
     if plan.pin is not None:
         scan, pdf = "pinned", plan.pinned_inputs(plan.blocks)
     else:
@@ -1496,19 +1499,6 @@ _ORDER_COLS = {"weight": "weight_raw", "date_insert": "date_insert",
 # a result's columns from the scorer, and from the docs table
 _TOP_COLS = ["docid", "score", "weight_raw", "lang", "date_insert", "date_modify"]
 _DOC_COLS = ["repo", "path", "commit", "content_sha", "category"]
-
-
-def _top_rows(scored: DataFrame, col: str, desc: bool, n: int) -> pd.DataFrame:
-    """The first n scored rows by (col, docid), collected
-    (TakeOrderedAndProject)."""
-    ordc = F.col(col).desc() if desc else F.col(col).asc()
-    return (
-        scored.select(*_TOP_COLS)
-        .orderBy(ordc, F.col("docid").asc())
-        .limit(n)
-        .toArrow()
-        .to_pandas()
-    )
 
 
 # the pinned docs columns (`pin_docs`): a result's and the per-doc
@@ -1561,19 +1551,30 @@ def pin_docs(spark: SparkSession, index_dir: str,
 def hydration_frame(spark: SparkSession, index_dir: str, docids: list[int],
                     _ctx: dict | None = None) -> DataFrame:
     """The docs columns of a result (S8): one ``docid IN (...)`` lookup
-    against the pinned docs, or `live_docs`."""
+    against the cached docs (``_ctx["docs_df"]``), or `live_docs`."""
     docs = _ctx.get("docs_df") if _ctx else None
     if docs is None:
         docs = live_docs(spark, index_dir, _ctx)
     return docs.select("docid", *_DOC_COLS).filter(F.col("docid").isin(docids))
 
 
+def doc_rows(spark: SparkSession, index_dir: str, docids: np.ndarray,
+             _ctx: dict | None) -> tuple[np.ndarray, pa.Table]:
+    """(found, rows): whether each of ``docids`` is live, and the live
+    ones' docs rows in order, from the pinned docs (``_ctx["docs_pin"]``)
+    or one `hydration_frame` collect."""
+    docs = _ctx.get("docs_pin") if _ctx else None
+    if docs is None:
+        docs = hydration_frame(spark, index_dir, docids.tolist(), _ctx).toArrow()
+    at = pc.index_in(pa.array(docids), value_set=docs["docid"])
+    return np.asarray(at.is_valid()), docs.take(at.drop_null())
+
+
 def _result(spark: SparkSession, index_dir: str, top: pd.DataFrame | None,
             col: str, desc: bool, offset: int, limit: int,
             _ctx: dict | None) -> DataFrame:
     """Order the collected top rows by (col, docid), rank them, apply
-    the offset (Q10) and hydrate the survivors from the pinned docs
-    (``_ctx["docs_pin"]``) or one `hydration_frame` lookup, all on the
+    the offset (Q10) and hydrate the survivors (`doc_rows`), all on the
     driver; the result is a LocalRelation in rank order (Q15)."""
     if top is None or len(top) <= offset or limit <= 0:
         return local_frame(spark, [], RESULT_SCHEMA)
@@ -1581,18 +1582,50 @@ def _result(spark: SparkSession, index_dir: str, top: pd.DataFrame | None,
     order = np.lexsort((top["docid"].to_numpy(), -key if desc else key))
     top = top.iloc[order[offset:offset + limit]]
     rank = np.arange(offset + 1, offset + 1 + len(top), dtype=np.int32)
-    docs = _ctx.get("docs_pin") if _ctx else None
-    if docs is None:
-        docs = hydration_frame(spark, index_dir, top["docid"].tolist(), _ctx).toArrow()
     # inner-join semantics: a scored docid missing from docs drops out
-    at = pc.index_in(pa.array(top["docid"].to_numpy()), value_set=docs["docid"])
-    found = np.asarray(at.is_valid())
-    d = docs.take(at.drop_null())
+    found, d = doc_rows(spark, index_dir, top["docid"].to_numpy(), _ctx)
     cols = {"rank": rank[found], **{c: d[c] for c in _DOC_COLS},
             **{c: top[c].to_numpy()[found] for c in _TOP_COLS}}
     struct = StructType.fromDDL(RESULT_SCHEMA)
     table = pa.table({c: cols[c] for c in RESULT_COLS}).cast(to_arrow_schema(struct))
     return spark.createDataFrame(table, schema=struct)
+
+
+def _ranked(spark, index_dir, query, limit=20, offset=0, langs=None,
+            order_by="weight", sort="desc", now_ts=0, categories=None,
+            _ctx=None, exhaustive=False) -> tuple[DataFrame, int | None]:
+    """(result, total): `search`'s pipeline — plan, place (`scored_rows`),
+    rank and hydrate (`_result`).  ``total`` counts the scored rows; an
+    ``exhaustive`` plan is unpruned, and an executor-scored one is then
+    cached, counted and its top rows collected (else ``total`` is None)."""
+    limit = min(limit, MATCH_CAP)
+    # the scan and hydration share one tombstones collect
+    _ctx = {} if _ctx is None else _ctx
+    col = _ORDER_COLS.get(order_by, "weight_raw")
+    desc = sort == "desc"
+    prune = None if exhaustive else {
+        "topn": offset + limit,
+        "order": order_by if order_by in _ORDER_COLS else "weight",
+        "sort": "desc" if desc else "asc",
+    }
+    top = scored_rows(plan_matches(spark, index_dir, query, langs, now_ts,
+                                   prune, _ctx, categories), prune)
+    total = None
+    if isinstance(top, DataFrame):
+        scored = top.cache() if exhaustive else top
+        try:
+            total = scored.count() if exhaustive else None
+            # the first offset+limit rows by (col, docid), collected
+            # (TakeOrderedAndProject)
+            ordc = F.col(col).desc() if desc else F.col(col).asc()
+            top = (scored.select(*_TOP_COLS).orderBy(ordc, F.col("docid").asc())
+                   .limit(offset + limit).toArrow().to_pandas())
+        finally:
+            if exhaustive:
+                scored.unpersist()
+    elif exhaustive:
+        total = 0 if top is None else len(top)
+    return _result(spark, index_dir, top, col, desc, offset, limit, _ctx), total
 
 
 def search(
@@ -1607,88 +1640,40 @@ def search(
     now_ts: int = 0,
     categories: list[str] | None = None,
     _ctx: dict | None = None,
-    _scored: DataFrame | None = None,
 ) -> DataFrame:
     """Full search path → hydrated top-k result DataFrame (rank-ordered,
-    `RESULT_SCHEMA`).
-
-    A plan that fits one scorer task and the driver byte budget is
-    scored in the driver (`_driver_scorable`); any other plan is scored
-    on executors and only its top offset+limit rows are collected.
-    Ranking, the offset and hydration then run on the driver.
+    `RESULT_SCHEMA`): the plan is placed by `scored_rows` (executors
+    collect only its top offset+limit rows), then ranked, offset and
+    hydrated on the driver.
 
     order_by/sort whitelist mirrors SphinxSearchEngine_class.php:16-18;
     limit is capped at MATCH_CAP (the reference's limit=1000, :169).
     """
-    limit = min(limit, MATCH_CAP)
-    # the scan and hydration share one tombstones collect
-    _ctx = {} if _ctx is None else _ctx
-    col = _ORDER_COLS.get(order_by, "weight_raw")
-    desc = sort == "desc"
-    if _scored is not None:
-        top = _top_rows(_scored, col, desc, offset + limit)
-    else:
-        prune = {
-            "topn": offset + limit,
-            "order": order_by if order_by in _ORDER_COLS else "weight",
-            "sort": "desc" if desc else "asc",
-        }
-        plan = plan_matches(spark, index_dir, query, langs, now_ts, prune,
-                            _ctx, categories)
-        if plan is None:
-            top = None
-        elif _driver_scorable(plan):
-            top = _score_in_driver(plan)
-        else:
-            top = _top_rows(_score_on_executors(spark, plan, prune), col, desc,
-                            offset + limit)
-    return _result(spark, index_dir, top, col, desc, offset, limit, _ctx)
+    return _ranked(spark, index_dir, query, limit, offset, langs, order_by,
+                   sort, now_ts, categories, _ctx)[0]
 
 
 def search_with_meta(spark, index_dir, query, _ctx=None, **kw):
-    """search + SHOW META analog (Q11 total, Q12 per-keyword stats,
-    `time` = seconds spent matching+ranking, like the reference's SHOW
-    META time row, SphinxSearchEngine_class.php:202-221).
+    """`search` (same arguments) + SHOW META analog (Q11 total, Q12
+    per-keyword stats, `time` = seconds spent matching+ranking, like the
+    reference's SHOW META time row, SphinxSearchEngine_class.php:202-221).
 
-    Single scoring pass: the exhaustive match set is cached, counted for
-    `total`, and re-used for the top-k selection."""
-    import time as _time
-
+    `search`'s pipeline over an unpruned plan: `total` counts its scored
+    rows.  The keyword stats are the ones its dictionary lookup recorded
+    (``_ctx["keyword_stats"]``), also when nothing can match."""
     if isinstance(query, str):
         query = parse_query(query)
-    layout = IndexLayout(index_dir)
-    _ctx = {} if _ctx is None else _ctx  # one tombstones collect
-    meta: dict = {"total": 0, "keywords": [], "time": 0.0}
-    if query.blank or not query.groups:
-        return search(spark, index_dir, query, _ctx=_ctx, **kw), meta
-    t0 = _time.monotonic()
-    scored = score_matches(
-        spark, index_dir, query, kw.get("langs"), kw.get("now_ts", 0),
-        _ctx=_ctx, categories=kw.get("categories"),
-    ).cache()
-    try:
-        meta["total"] = scored.count()
-        res = search(spark, index_dir, query, _ctx=_ctx, _scored=scored, **kw)
-    finally:
-        scored.unpersist()
+    _ctx = {} if _ctx is None else _ctx
+    t0 = time.monotonic()
+    res, total = _ranked(spark, index_dir, query, _ctx=_ctx, exhaustive=True, **kw)
     # measured wall of the matching+ranking actions; NEVER part of any
     # score (determinism invariant — wall clock must not affect results)
-    meta["time"] = round(_time.monotonic() - t0, 4)
-    dict_pdf = _ctx.get("dict_pdf") if _ctx else None
-    _, stats, _b = _expand_groups(spark, layout, query, dict_pdf)
-    for g in query.groups:
-        for a in g.alts:
-            w0 = a.words[0]
-            if a.kind == "exact":
-                s = stem_token(w0)
-                if s == w0:  # exact stats live on the stem row
-                    st = stats.get(w0, (0, 0, 0, 0, 0))
-                    df_, hits = st[3], st[4]
-                else:
-                    st = stats.get(EXACT_PREFIX + w0, (0, 0, 0, 0, 0))
-                    df_, hits = st[0], st[1]
-            else:
-                st = stats.get(stem_token(w0), (0, 0, 0, 0, 0))
-                df_, hits = st[0], st[1]
-            meta["keywords"].append({"keyword": w0, "docs": df_, "hits": hits})
+    meta = {"total": total, "keywords": [], "time": round(time.monotonic() - t0, 4)}
+    stats = _ctx.get("keyword_stats", {})
+    for a in (a for g in query.groups for a in g.alts):
+        w, s = a.words[0], stem_token(a.words[0])
+        # an exact form's stats: its stem row's exact ones, or its '=w' row
+        st = stats.get(EXACT_PREFIX + w if a.kind == "exact" and s != w else s, (0,) * 5)
+        df_, hits = st[3:5] if a.kind == "exact" and s == w else st[:2]
+        meta["keywords"].append({"keyword": w, "docs": df_, "hits": hits})
     return res, meta

@@ -5,8 +5,9 @@ region, so the generator was rewritten from ~210 scalar
 RandomState.randint calls per doc to a batch-vectorized MT19937 +
 masked-rejection draw machine (corpus.py).  The workload MUST stay
 byte-identical — these tests pin the fast path to the kept
-reference-semantics twin (`_gen_batch_ref` / `_doc_content_ref`) and
-the underlying stream model to numpy itself.
+reference-semantics twin below (`_gen_batch_ref` / `_doc_content_ref`:
+per-draw scalar RandomState calls) and the underlying stream model to
+numpy itself.
 """
 
 from __future__ import annotations
@@ -15,6 +16,52 @@ import numpy as np
 import pandas as pd
 
 from sphinxsearchengine_spark import corpus as C
+
+
+def _doc_content_ref(rng: np.random.RandomState, i: int) -> str:
+    n = 40 + int(rng.randint(0, 160))
+    words = []
+    for _ in range(n):
+        r = rng.randint(0, 100)
+        if r < 55:
+            words.append(C.EN_WORDS[rng.randint(0, len(C.EN_WORDS))])
+        elif r < 70:
+            words.append(C.RU_WORDS[rng.randint(0, len(C.RU_WORDS))])
+        elif r < 85:
+            blend = C.BLENDS[rng.randint(0, len(C.BLENDS))]
+            words.append(
+                C.IDENT_HEADS[rng.randint(0, len(C.IDENT_HEADS))]
+                + blend
+                + C.IDENT_TAILS[rng.randint(0, len(C.IDENT_TAILS))]
+            )
+        elif r < 92:
+            words.append("xyzq"[rng.randint(0, 4)])  # 1-char droppables
+        else:
+            words.append(str(rng.randint(0, 9999)))
+    if i == 0:
+        words.insert(int(rng.randint(0, len(words))), "needleuniq")
+    if rng.randint(0, 2) == 0:
+        words.insert(int(rng.randint(0, len(words))), "hotterm")
+    if rng.randint(0, 4) == 0:
+        k = int(rng.randint(0, len(words)))
+        words[k:k] = ["alpha", "beta"]
+    return " ".join(words)
+
+
+def _gen_batch_ref(pdf_iter):
+    """Reference-semantics generator twin (per-draw scalar RandomState
+    calls): the equality oracle of the vectorized `corpus._gen_batch`,
+    which must emit byte-identical rows."""
+    for pdf in pdf_iter:
+        rows = []
+        for i in pdf["id"].to_numpy():
+            rng = np.random.RandomState(C.SEED + int(i))
+            repo = f"org{i % 7}/repo{i % 50}"
+            lang = C.LANGS[int(i) % len(C.LANGS)]
+            path = f"src/mod{i % 13}/file_{i}.{lang[:2]}"
+            commit = "".join("0123456789abcdef"[b % 16] for b in rng.randint(0, 256, 40))
+            rows.append((repo, path, commit, lang, _doc_content_ref(rng, int(i))))
+        yield pd.DataFrame(rows, columns=["repo", "path", "commit", "lang", "content"])
 
 
 def _run(gen, ids):
@@ -54,13 +101,13 @@ def test_batch_equality_including_planted_terms():
     ids = np.concatenate(
         [np.arange(0, 1500), np.arange(499_000, 500_000), [777_777]]
     )
-    ref = _run(C._gen_batch_ref, ids)
+    ref = _run(_gen_batch_ref, ids)
     fast = _run(C._gen_batch, ids)
     pd.testing.assert_frame_equal(ref, fast)
 
 
 def test_batch_equality_small_and_single():
     for ids in ([0], [1], [17, 18], list(range(63, 66))):
-        ref = _run(C._gen_batch_ref, ids)
+        ref = _run(_gen_batch_ref, ids)
         fast = _run(C._gen_batch, ids)
         pd.testing.assert_frame_equal(ref, fast)

@@ -384,6 +384,30 @@ def test_repeated_docid_in_batch_refused(spark, crash_base, tmp_path):
     assert not IndexLayout(fresh).exists()
 
 
+def test_compact_skips_repeated_docid_job(spark, crash_base, tmp_path, monkeypatch):
+    """An upsert's batch is checked for repeated docids; compact's input,
+    `live_docs`, holds each docid once, so its build runs no check."""
+    from sphinxsearchengine_spark.index import builder
+
+    base, docs = crash_base
+    idx = _copy_index(base, tmp_path)
+    checked = []
+    real = builder._refuse_repeated_docids
+
+    def spy(spark, layout, seg):
+        checked.append(seg)
+        real(spark, layout, seg)
+
+    monkeypatch.setattr(builder, "_refuse_repeated_docids", spy)
+    ids = sorted(r.docid for r in docs.select("docid").collect())
+    upsert(spark, idx, _retoken(docs, ids[:3], "cmptoken"), CFG)
+    assert len(checked) == 1
+    meta = compact(spark, idx, CFG)
+    assert len(checked) == 1
+    assert meta.n_docs == CRASH_N == _n_live(spark, idx)
+    assert _match_set(spark, idx, "cmptoken") == set(ids[:3])
+
+
 # --- property: tombstones alone decide liveness ----------------------------
 
 def _check_liveness(spark, idx, model, searcher):

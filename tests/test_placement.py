@@ -1,18 +1,25 @@
-"""Scoring placement: `search` scores a one-task plan in the driver and
-any other plan on executors.  Both placements run the same scorer on the
-same rows, so they must return identical results — bit-equal scores, not
-merely close ones — and both must match the oracle."""
+"""Scoring placement: `search`, `search_with_meta` and the facets score
+a one-task plan in the driver and any other plan on executors.  Both
+placements run the same scorer on the same rows, so they must return
+identical results — bit-equal scores, not merely close ones — and both
+must match the oracle."""
 
 from __future__ import annotations
 
 import hashlib
 import math
+from collections import Counter
 
 import numpy as np
 import pytest
 
 from sphinxsearchengine_spark import engine
-from sphinxsearchengine_spark.config import EXPANSION_LIMIT, MATCH_CAP, EngineConfig
+from sphinxsearchengine_spark.config import (
+    EXPANSION_LIMIT,
+    FACET_CAP,
+    MATCH_CAP,
+    EngineConfig,
+)
 from sphinxsearchengine_spark.corpus import PINNED_NOW, derive_documents, generate_corpus
 from sphinxsearchengine_spark.engine import Searcher
 from sphinxsearchengine_spark.index.builder import build_index
@@ -68,6 +75,86 @@ def test_placements_identical(env, monkeypatch, q):
     assert [r[:2] for r in on_driver] == [(w["rank"], w["docid"]) for w in want]
     for r, w in zip(on_driver, want):
         assert math.isclose(r[2], w["score"], rel_tol=1e-9, abs_tol=1e-12), (r, w)
+
+
+@pytest.fixture(scope="module")
+def env_unpinned(spark, env):
+    """A Searcher over the `env` index with nothing pinned."""
+    s = Searcher(spark, env[0].index_dir, dict_cache_rows=0)
+    assert s._dict_pdf is None and s._docs_pin is None and s._postings_pin is None
+    return s
+
+
+@pytest.fixture(scope="module")
+def env_categories(spark):
+    """docid -> category of the generated docs the `env` index holds."""
+    docs = derive_documents(generate_corpus(spark, N_DOCS, partitions=4))
+    return {r.docid: list(r.category) for r in docs.select("docid", "category").collect()}
+
+
+def _rows(df):
+    return [(r.rank, r.docid, r.score, r.weight_raw) for r in df.collect()]
+
+
+@pytest.mark.parametrize("q", QUERIES + BLOCKMAX_QUERIES,
+                         ids=[str(q) for q in QUERIES + BLOCKMAX_QUERIES])
+def test_meta_and_facets_take_the_search_path(env, env_unpinned, env_categories,
+                                              monkeypatch, q):
+    """`search_with_meta` and `facets` place their plans by `search`'s
+    gate.  Forced to either placement, pinned or not: the meta rows `==`
+    the `search` rows, `total` is the oracle's match count, and the
+    facets are the oracle's match docids joined to their categories."""
+    searcher, oracle = env
+    kw = dict(q)
+    query = kw.pop("query")
+    kw.setdefault("limit", 20)
+    kw.setdefault("now_ts", PINNED_NOW)
+    langs = kw.get("langs")
+    total = len(oracle.score_matches(query, langs, PINNED_NOW, kw.get("categories")))
+    # facets take no category filter
+    counts = Counter(c for m in oracle.score_matches(query, langs, PINNED_NOW)
+                     for c in env_categories[m["docid"]])
+    want_facets = sorted(counts.items())[:FACET_CAP]
+    for gate, scorer in [(lambda plan: not plan.two_pass, "driver"),
+                         (lambda plan: False, "executors")]:
+        monkeypatch.setattr(X, "_driver_scorable", gate)
+        for s in (searcher, env_unpinned):
+            res, meta = s.search_with_meta(query, **kw)
+            plan = s.last_plan
+            assert _rows(res) == _rows(s.search(query, **kw)), scorer
+            assert meta["total"] == total, scorer
+            if plan is not None and plan["scorer"] is not None:
+                assert plan["scorer"] == scorer
+            facets = s.facets(query, langs=langs, now_ts=PINNED_NOW).collect()
+            if s.last_plan is not None and s.last_plan["scorer"] is not None:
+                assert s.last_plan["scorer"] == scorer
+            assert [(r.category, r.n_docs) for r in facets] == want_facets, scorer
+
+
+def test_meta_reports_keywords_of_an_unmatchable_query(env):
+    """A query whose second group is missing from the dictionary plans
+    nothing, yet reports a keyword entry per alternative."""
+    searcher, _ = env
+    res, meta = searcher.search_with_meta(
+        "hotterm zzzzneverexists|qqqqabsent", limit=5, now_ts=PINNED_NOW)
+    assert res.collect() == [] and meta["total"] == 0
+    assert [k["keyword"] for k in meta["keywords"]] == [
+        "hotterm", "zzzzneverexists", "qqqqabsent"]
+    _, alone = searcher.search_with_meta("hotterm", limit=5, now_ts=PINNED_NOW)
+    assert meta["keywords"][0] == alone["keywords"][0] and alone["total"] > 0
+    assert [(k["docs"], k["hits"]) for k in meta["keywords"][1:]] == [(0, 0), (0, 0)]
+
+
+def test_facets_record_their_plan(env, monkeypatch):
+    """`Searcher.facets` runs through `Searcher._run`: `last_plan` is the
+    facet's own plan, not the previous query's."""
+    searcher, _ = env
+    with monkeypatch.context() as mp:
+        mp.setattr(X, "_driver_scorable", lambda plan: False)
+        searcher.search("hotterm", limit=5, now_ts=PINNED_NOW).collect()
+    assert searcher.last_plan["scorer"] == "executors"
+    searcher.facets("hotterm", now_ts=PINNED_NOW).collect()
+    assert searcher.last_plan["scorer"] == "driver"
 
 
 def test_gate_bounds_collected_bytes(env):
@@ -335,17 +422,22 @@ def test_docs_bound_recorded_at_write(spark, ms_env, ms_searchers, tmp_path):
 
 def test_warm_pinned_query_starts_no_stage(spark, ms_searchers):
     """A warm one-task query over the pinned postings and docs starts no
-    Spark job at all."""
+    Spark job at all: its search, its search with meta, and its facets."""
     from sphinxsearchengine_spark import metrics as M
 
     pinned = ms_searchers[0]
     for q in ["hotterm", "needleuniq hotterm", '"alpha beta" engine']:
-        pinned.search(q, limit=5, now_ts=PINNED_NOW).collect()
-        sid = M.latest_stage_id(spark)
-        rows = pinned.search(q, limit=5, now_ts=PINNED_NOW).collect()
-        assert rows and (pinned.last_plan["scorer"], pinned.last_plan["scan"]) == (
-            "driver", "pinned")
-        assert M.stage_metrics(spark, sid) == [], q
+        for call in [
+            lambda: pinned.search(q, limit=5, now_ts=PINNED_NOW).collect(),
+            lambda: pinned.search_with_meta(q, limit=5, now_ts=PINNED_NOW)[0].collect(),
+            lambda: pinned.facets(q, now_ts=PINNED_NOW).collect(),
+        ]:
+            call()
+            sid = M.latest_stage_id(spark)
+            rows = call()
+            assert rows and (pinned.last_plan["scorer"], pinned.last_plan["scan"]) == (
+                "driver", "pinned")
+            assert M.stage_metrics(spark, sid) == [], q
 
 
 def _planner_calls(spark, idx, pinned, monkeypatch, q):
